@@ -2092,7 +2092,7 @@ def h26_cow_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard JVM file stream (one microbatch per version via
     ``maxFilesPerTrigger=1`` + AvailableNow). Same rows, same
     per-version cadence, same checkpoint-resume contract (equivalence
-    test: tests/test_table_changelog.py); what disappears is the
+    test: tests/test_changelog_files.py); what disappears is the
     ~1.5 s-per-query Python streaming-source startup premium and the
     Python diff loop. The Python DataSource readers remain the
     registry's API-demonstration surface (h20/h25)."""

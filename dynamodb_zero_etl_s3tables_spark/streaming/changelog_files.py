@@ -35,7 +35,7 @@ STREAM over it:
 
 Emission semantics are the Python readers', verbatim (same rows, same
 change_op classes, proven by the side-by-side equivalence test in
-``tests/test_table_changelog.py``):
+``tests/test_changelog_files.py``):
 
 - ``bootstrap`` / ``bootstrap-export`` -> every row as ``INSERT``;
 - delta-layer commits (merge-mor / delete-mor / update-mor) -> upsert
@@ -266,11 +266,19 @@ def materialize_changelog(table, stage_dir: str) -> int:
         # the per-version staging jobs are INDEPENDENT (each reads its
         # own version pair and writes its own file), so overlap them:
         # a later job's tasks back-fill executors freed by an earlier
-        # job's tail, hiding the per-job launch constants (guide §2.6)
+        # job's tail, hiding the per-job launch constants (guide §2.6).
+        # Each task runs under a copy of the caller's local properties
+        # (job group — inside foreachBatch, the stream's runId group),
+        # so its jobs are the caller's.
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=min(4, len(pending))) as pool:
-            futures = [pool.submit(_stage_one, s, p) for s, p in pending]
+            futures = [
+                pool.submit(inheritable_thread_target(table.spark)(_stage_one), s, p)
+                for s, p in pending
+            ]
             for f in futures:
                 f.result()  # propagate the first failure
     return len(pending)

@@ -323,7 +323,8 @@ def _cow_closures():
         """Partition values live in the manifest as hive dir-name
         strings; coerce back to the schema type so the reader-side
         rows carry the same typed values the table read attaches
-        (``_coerce_partition_value`` restated dependency-free)."""
+        (the manifest planner's partition-value coercion
+        restated dependency-free)."""
         if raw_val is None:
             return None
         if type_name in ("long", "integer", "short", "byte"):

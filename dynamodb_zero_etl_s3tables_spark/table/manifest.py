@@ -36,7 +36,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -354,35 +354,87 @@ def _collect_file_stats(
     return entries
 
 
-def _coerce_partition_value(raw: str | None, dtype: T.DataType) -> Any:
-    """Partition values live in the manifest as dir-name strings; cast
-    back to the schema type so pruning compares like with like.
-    Uncastable/unsupported -> None (= no pruning on that column)."""
-    if raw is None:
-        return None
+def _partition_operands(
+    raw: str, dtype: T.DataType, val: Any, tz: str | None
+) -> tuple[Any, Any] | None:
+    """A manifest partition value (the unescaped dir-name string Spark
+    rendered at write time) and a filter value, both in ONE domain
+    that compares the way Spark compares ``col op val`` — or None
+    when no such domain is known (= no pruning on that column).
+
+    Numbers compare as numbers and strings as strings. A string value
+    on a date or timestamp column is parsed as ISO, in the zone the
+    dir name was rendered in (Spark casts the literal in the session
+    zone too); an unparseable one prunes nothing. Decimals compare exactly against int/Decimal values and
+    as doubles against a float (Spark casts the decimal side). Bools
+    compare with bools, dates with ``date`` values, and timestamps
+    with ``datetime`` values as epoch micros, reading the dir name in
+    the session time zone ``tz`` (the zone Spark rendered it in)."""
+    import datetime
+    from decimal import Decimal
+
     try:
         if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-            return int(raw)
+            return int(raw), val
         if isinstance(dtype, (T.FloatType, T.DoubleType)):
-            return float(raw)
-        if isinstance(dtype, (T.StringType, T.DateType, T.TimestampType)):
-            return raw  # ISO dir-name order == value order
-    except ValueError:
+            return float(raw), val
+        if isinstance(val, str):
+            # Spark casts the string to the column type; ISO parsing
+            # accepts both 'T' and ' ' separators, like the cast
+            if isinstance(dtype, T.StringType):
+                return raw, val
+            if isinstance(dtype, T.DateType):
+                return datetime.date.fromisoformat(raw), datetime.date.fromisoformat(val)
+            if isinstance(dtype, T.TimestampType):
+                v = datetime.datetime.fromisoformat(val)
+                return None if v.tzinfo else (datetime.datetime.fromisoformat(raw), v)
+            return None
+        if isinstance(val, bool):
+            if isinstance(dtype, T.BooleanType) and raw in ("true", "false"):
+                return raw == "true", val
+            return None
+        if isinstance(dtype, T.DecimalType) and isinstance(val, (int, float, Decimal)):
+            return (float(raw) if isinstance(val, float) else Decimal(raw)), val
+        if isinstance(dtype, T.DateType) and type(val) is datetime.date:
+            return datetime.date.fromisoformat(raw), val
+        if isinstance(dtype, T.TimestampType) and isinstance(val, datetime.datetime):
+            from zoneinfo import ZoneInfo
+
+            local = datetime.datetime.fromisoformat(raw).replace(tzinfo=ZoneInfo(tz))
+            to_micros = T.TimestampType().toInternal
+            return to_micros(local), to_micros(val)
+    except (ValueError, ArithmeticError, LookupError, TypeError):
         return None
     return None
+
+
+def _partition_may_match(
+    raw: str | None, dtype: T.DataType, op: str, val: Any, tz: str | None
+) -> bool:
+    """Can an entry whose partition column holds ``raw`` satisfy
+    ``col op val``? A NULL partition satisfies no comparison (SQL
+    three-valued logic: scan drops, DELETE keeps and UPDATE skips the
+    NULL rows); otherwise the value is a point range [v, v]."""
+    if raw is None:
+        return False
+    ops = _partition_operands(raw, dtype, val, tz)
+    return ops is None or _range_may_match([ops[0], ops[0]], op, ops[1])
 
 
 #: predicate ops supported by manifest-level pruning
 _PRUNE_OPS = ("=", "<", "<=", ">", ">=")
 
 
-def _file_may_match(stats: dict[str, list[Any]], col: str, op: str, val: Any) -> bool:
-    """Conservative min/max test: False only when the file provably
-    contains no matching row; missing stats always pass."""
-    rng = stats.get(col)
+def _range_may_match(rng: list[Any] | None, op: str, val: Any) -> bool:
+    """Conservative min/max test: False only when no value in ``rng``
+    can satisfy ``op val``. A missing range always passes, and so does
+    a NaN bound or value: Spark orders NaN above every number and
+    treats NaN = NaN as true, which Python's comparisons do not."""
     if rng is None:
         return True
     lo, hi = rng
+    if any(isinstance(x, float) and x != x for x in (lo, hi, val)):
+        return True
     try:
         if op == "=":
             return lo <= val <= hi
@@ -397,6 +449,40 @@ def _file_may_match(stats: dict[str, list[Any]], col: str, op: str, val: Any) ->
     except TypeError:
         return True  # incomparable types — never prune on a guess
     return True
+
+
+def _file_may_match(
+    f: dict[str, Any], filters: list[tuple[str, str, Any]], skip: Any = ()
+) -> bool:
+    """Can the data file ``f`` (a manifest file entry) hold a row
+    matching every filter whose column is not in ``skip``? Footer
+    min/max (the filter value in ``_stat_safe``'s coordinates, like
+    the stats) and then the equality bloom."""
+    return all(
+        _range_may_match(
+            f["stats"].get(col),
+            op,
+            val if isinstance(val, (int, float, str)) else _stat_safe(val),
+        )
+        and _bloom_may_match(f.get("bloom"), col, op, val)
+        for col, op, val in filters
+        if col not in skip
+    )
+
+
+class _Plan(NamedTuple):
+    """What one operation does to a partitioned snapshot's entries
+    (see ``ManagedTable._plan``)."""
+
+    #: entries the operation reads whole and, for a commit, rewrites
+    touched: list[dict[str, Any]]
+    #: entries a commit references unchanged in the next snapshot
+    carry: list[dict[str, Any]]
+    #: ``touched`` narrowed to the files that survive min/max + bloom
+    #: skipping (``read_files``), for scan; fully skipped entries drop
+    read: list[dict[str, Any]]
+    #: the scan counts (``last_scan_metrics``)
+    metrics: dict[str, Any]
 
 
 def _qcol(name: str):
@@ -1097,110 +1183,168 @@ class ManagedTable:
         listing+reading every file and touching only the 1% a
         selective predicate needs.
         """
-        from pyspark.sql import functions as F
-
         filters = list(filters or [])
-        for col, op, _ in filters:
-            if op not in _PRUNE_OPS:
-                raise ValueError(f"unsupported scan op {op!r} (use one of {_PRUNE_OPS})")
+        pred = self._predicate_from_filters(filters)  # validates the ops
         m = self._read_manifest()
         snap = m.current
         if snap is None:
             raise FileNotFoundError(f"table {self.spec.qualified_name} has no snapshots")
         schema = T.StructType.fromJson(json.loads(snap.schema_json))
-        by_name = {f.name: f for f in schema.fields}
+        plan = self._plan(snap, schema, filters=filters)
+        if plan is not None:
+            self.last_scan_metrics = plan.metrics
+            df = self._read_partition_entries(plan.read, schema)
+        elif snap.files:
+            keep = [f["path"] for f in snap.files if _file_may_match(f, filters)]
+            self.last_scan_metrics = {
+                "files_total": len(snap.files),
+                "files_read": len(keep),
+            }
+            if not keep:
+                return self.spark.createDataFrame([], schema)
+            raw = self.spark.read.schema(self._file_schema(schema, snap)).parquet(*keep)
+            df = self._apply_read_renames(raw, snap)
+        else:  # MoR head or legacy snapshot without stats — full read
+            self.last_scan_metrics = {"files_total": None, "files_read": None}
+            df = self._materialize(snap, {s.version: s for s in m.snapshots})
+        return df if pred is None else df.filter(pred)
 
-        def residual(df: DataFrame) -> DataFrame:
-            for col, op, val in filters:
-                c = F.col(col)
-                cond = {
-                    "=": c == val, "<": c < val, "<=": c <= val,
-                    ">": c > val, ">=": c >= val,
-                }[op]
-                df = df.filter(cond)
-            return df
+    def _plan(
+        self,
+        snap: Snapshot,
+        schema: T.StructType,
+        filters: list[tuple[str, str, Any]] = (),
+        touched: DataFrame | None = None,
+        layout: tuple[str, ...] | None = None,
+    ) -> _Plan | None:
+        """The one partition planner behind scan, the pruned CoW merge
+        and the DML verbs: which entries of ``snap`` an operation
+        reads, and which a commit carries into the next snapshot by
+        reference (copy-on-write at partition granularity, the Iceberg
+        CoW model). None when ``snap`` has no partition entries (an
+        unpartitioned table or a merge-on-read head): the caller reads
+        the whole snapshot.
 
-        if snap.partitions is not None:
-            # pruning is PER ENTRY against the entry's own layout, so
-            # mixed-layout snapshots (partition evolution) prune on
-            # whatever values each entry recorded
-            def part_matches(e: dict[str, Any]) -> bool:
-                # partition value is an exact point: stats range [v, v]
-                stats = {}
-                for pc, raw in e["values"].items():
-                    v = _coerce_partition_value(raw, by_name[pc].dataType)
-                    if v is not None:
-                        stats[pc] = [v, v]
+        Two ways to say what is touched:
+
+        * ``filters`` — conjunctive scan triples. Each entry is tested
+          on ITS OWN value keys (mixed layouts after partition
+          evolution prune on whatever each entry recorded); see
+          :func:`_partition_may_match`.
+        * ``touched`` — a frame whose rows carry partition values (a
+          change batch, or the rows a keyed DML hits). The values are
+          collected once, metadata-scale, through Spark's own
+          ``cast("string")``: that is the encoder that rendered the
+          manifest's dir names (booleans 'true', decimals '1.50',
+          timestamps with fractional seconds, 'NaN'), so both sides
+          of the comparison agree bit for bit. With ``layout`` (the
+          CoW merge) the values are read from those columns and an
+          entry of any other layout is touched: the change images
+          carry no trustworthy values for columns outside the spec,
+          and the rewrite moves the entry's rows into the current
+          layout. Without it each entry matches on its own value keys.
+
+        File skipping (footer min/max, then bloom) narrows the touched
+        entries for ``read`` on the filters over non-partition
+        columns."""
+        parts = snap.partitions
+        if parts is None:
+            return None
+        types = {f.name: f.dataType for f in schema.fields}
+        if touched is None:
+            import datetime
+
+            tz = None
+            if any(isinstance(v, datetime.datetime) for _, _, v in filters):
+                tz = self.spark.conf.get("spark.sql.session.timeZone")
+
+            def hit(e: dict[str, Any]) -> bool:
                 return all(
-                    _file_may_match(stats, col, op, val)
+                    _partition_may_match(e["values"][col], types[col], op, val, tz)
                     for col, op, val in filters
                     if col in e["values"]
                 )
+        else:
+            pcols = list(layout) if layout is not None else sorted(
+                {pc for e in parts for pc in e["values"] if pc in types}
+            )
+            rows = (
+                touched.select([_qcol(pc).cast("string").alias(pc) for pc in pcols])
+                .distinct()
+                .collect()
+                if pcols
+                else []
+            )
+            seen: dict[tuple[str, ...], set[tuple[Any, ...]]] = {}
 
-            keep = [e for e in snap.partitions if part_matches(e)]
-            # second stage: min/max file skipping INSIDE the surviving
-            # partitions (non-partition-column filters)
-            files_total = files_read = 0
-            narrowed = []
-            for e in keep:
-                ents = e.get("files")
-                if not ents:
-                    narrowed.append(e)  # legacy entry: read whole dir
-                    continue
-                files_total += len(ents)
-                kept_files = [
-                    f["path"]
-                    for f in ents
-                    if all(
-                        # same _stat_safe normalization as the
-                        # unpartitioned path below: a datetime filter
-                        # value must compare against footer stats in
-                        # the same coordinate system
-                        _file_may_match(
-                            f["stats"], col, op,
-                            _stat_safe(val)
-                            if not isinstance(val, (int, float, str))
-                            else val,
-                        )
-                        and _bloom_may_match(f.get("bloom"), col, op, val)
-                        for col, op, val in filters
-                        if col not in e["values"]
-                    )
-                ]
-                files_read += len(kept_files)
-                if kept_files:
-                    narrowed.append({**e, "read_files": kept_files})
-            self.last_scan_metrics = {
-                "partitions_total": len(snap.partitions),
-                "partitions_read": len(keep),
+            def hit(e: dict[str, Any]) -> bool:
+                if layout is not None and set(e["values"]) != set(layout):
+                    return True
+                cols = tuple(pc for pc in e["values"] if pc in pcols)
+                if not cols:
+                    return True  # no layout info: cannot rule it out
+                if cols not in seen:
+                    seen[cols] = {tuple(r[pc] for pc in cols) for r in rows}
+                return tuple(e["values"][pc] for pc in cols) in seen[cols]
+
+        flags = [hit(e) for e in parts]
+        use = [e for e, f in zip(parts, flags) if f]
+        read: list[dict[str, Any]] = []
+        files_total = files_read = 0
+        for e in use:
+            files = e.get("files")
+            if not files:
+                read.append(e)  # legacy entry: read the whole dir
+                continue
+            kept = [f["path"] for f in files if _file_may_match(f, filters, e["values"])]
+            files_total += len(files)
+            files_read += len(kept)
+            if kept:
+                read.append({**e, "read_files": kept})
+        return _Plan(
+            touched=use,
+            carry=[e for e, f in zip(parts, flags) if not f],
+            read=read,
+            metrics={
+                "partitions_total": len(parts),
+                "partitions_read": len(use),
                 "files_total": files_total or None,
                 "files_read": files_read if files_total else None,
-            }
-            return residual(self._read_partition_entries(narrowed, schema))
-
-        entries = snap.files or []
-        if not entries:  # legacy snapshot without stats — full read
-            self.last_scan_metrics = {"files_total": None, "files_read": None}
-            return residual(self.read())
-        keep_files = [
-            e["path"]
-            for e in entries
-            if all(
-                _file_may_match(e["stats"], col, op, _stat_safe(val) if not isinstance(val, (int, float, str)) else val)
-                and _bloom_may_match(e.get("bloom"), col, op, val)
-                for col, op, val in filters
-            )
-        ]
-        self.last_scan_metrics = {
-            "files_total": len(entries),
-            "files_read": len(keep_files),
-        }
-        if not keep_files:
-            return self.spark.createDataFrame([], schema)
-        raw = self.spark.read.schema(self._file_schema(schema, snap)).parquet(
-            *keep_files
+            },
         )
-        return residual(self._apply_read_renames(raw, snap))
+
+    def _cow_commit(
+        self,
+        m: Manifest,
+        plan: _Plan | None,
+        schema: T.StructType,
+        rewrite,
+        operation: str,
+    ) -> dict[str, Any]:
+        """The copy-on-write tail shared by merge and the DML verbs:
+        read the planned entries (the whole head when ``plan`` is
+        None), apply ``rewrite`` and commit the result with the carried
+        entries, anchored at ``m``'s version so an interleaving commit
+        fails the CAS instead of being clobbered."""
+        snap = m.current
+        if plan is None:
+            self._write_snapshot(
+                rewrite(self.read(version=snap.version)),
+                operation=operation, expected_version=m.version,
+            )
+            return {"partitions_rewritten": None, "partitions_carried": None}
+        self._write_snapshot(
+            rewrite(self._read_partition_entries(plan.touched, schema)),
+            operation=operation, carry_entries=plan.carry,
+            expected_version=m.version,
+            # carried entries still store dropped-column values; keep
+            # the resurrect guard armed until a FULL rewrite
+            carry_dropped=snap.dropped_columns if plan.carry else None,
+        )
+        return {
+            "partitions_rewritten": len(plan.touched),
+            "partitions_carried": len(plan.carry),
+        }
 
     def maybe_compact(
         self,
@@ -1686,22 +1830,23 @@ class ManagedTable:
         # commit fails the CAS instead of being silently clobbered
         m0 = self._read_manifest()
         snap = m0.current
-        if (
-            self.spec.partition_columns
-            and snap is not None
-            and snap.partitions is not None
-        ):
-            self._apply_changes_pruned(changes, order)
-            return
-        base = self.read() if snap is None else self.read(version=snap.version)
-        merged = merge_changes(
-            base,
-            changes,
-            keys=self.spec.key_columns,
-            order_cols=order,
+        if snap is None:
+            raise FileNotFoundError(
+                f"table {self.spec.qualified_name} has no snapshots"
+            )
+        schema = T.StructType.fromJson(json.loads(snap.schema_json))
+        pcols = tuple(self.spec.partition_columns)
+        plan = (
+            self._plan(snap, schema, touched=changes, layout=pcols)
+            if pcols
+            else None
         )
-        self._write_snapshot(
-            merged, operation="merge", expected_version=m0.version
+        self._cow_commit(
+            m0, plan, schema,
+            lambda base: merge_changes(
+                base, changes, keys=self.spec.key_columns, order_cols=order
+            ),
+            "merge",
         )
 
     def merge_into(
@@ -1806,8 +1951,12 @@ class ManagedTable:
             # Tombstone keys are cast to the EVOLVED key types,
             # matching the inserts cast — a narrow incoming key type
             # must not leak a narrower physical type into the deletes
-            # files than the key_schema readers bind.
+            # files than the key_schema readers bind. Each task runs
+            # under a copy of the caller's local properties (job group,
+            # description, scheduler pool), so its job is the caller's.
             from concurrent.futures import ThreadPoolExecutor
+
+            from pyspark import inheritable_thread_target
 
             def _write_inserts():
                 inserts.write.mode("overwrite").parquet(
@@ -1820,8 +1969,8 @@ class ManagedTable:
                 ).write.mode("overwrite").parquet(str(delta_root / "deletes"))
 
             with ThreadPoolExecutor(max_workers=2) as pool:
-                fi = pool.submit(_write_inserts)
-                fd = pool.submit(_write_deletes)
+                fi = pool.submit(inheritable_thread_target(self.spark)(_write_inserts))
+                fd = pool.submit(inheritable_thread_target(self.spark)(_write_deletes))
                 fi.result()
                 fd.result()
         finally:
@@ -1849,56 +1998,6 @@ class ManagedTable:
             operation="merge-mor",
             row_count=n,
             elapsed_sec=time.perf_counter() - t0,
-        )
-
-    def _apply_changes_pruned(
-        self, changes: DataFrame, order_cols: tuple[str, ...]
-    ) -> None:
-        from pyspark.sql import functions as F
-
-        m0 = self._read_manifest()  # anchor (see apply_changes)
-        snap = m0.current
-        pcols = list(self.spec.partition_columns)
-        schema = T.StructType.fromJson(json.loads(snap.schema_json))
-        # touched partition values: metadata-scale (distinct partition
-        # tuples in the batch), the one deliberate driver-side collect.
-        # Canonicalized through Spark's own string cast so both sides
-        # of the comparison use ONE encoder: the manifest side holds
-        # hive dir-name strings Spark rendered at write time (booleans
-        # as 'true'/'false', dates ISO), and Python str() disagrees
-        # (str(True) == 'True'), which would silently mark a touched
-        # partition untouched and duplicate its manifest entry.
-        touched_rows = (
-            changes.select([F.col(pc).cast("string").alias(pc) for pc in pcols])
-            .distinct()
-            .collect()
-        )
-        touched = {tuple(r[pc] for pc in pcols) for r in touched_rows}
-
-        def is_touched(e: dict[str, Any]) -> bool:
-            # lazy migration after partition evolution: an entry whose
-            # recorded layout differs from the current spec cannot be
-            # pruned by the new key — treat it as touched so its rows
-            # join this merge and are rewritten under the new layout
-            if set(e["values"].keys()) != set(pcols):
-                return True
-            return tuple(e["values"][pc] for pc in pcols) in touched
-
-        touched_entries = [e for e in snap.partitions if is_touched(e)]
-        carry = [e for e in snap.partitions if not is_touched(e)]
-        base_touched = self._read_partition_entries(touched_entries, schema)
-        merged = merge_changes(
-            base_touched,
-            changes,
-            keys=self.spec.key_columns,
-            order_cols=order_cols,
-        )
-        self._write_snapshot(
-            merged, operation="merge", carry_entries=carry,
-            expected_version=m0.version,
-            # carried entries still store dropped-column values; keep
-            # the resurrect guard armed until a FULL rewrite
-            carry_dropped=snap.dropped_columns if carry else None,
         )
 
     @staticmethod
@@ -1945,46 +2044,56 @@ class ManagedTable:
 
     def _dml_mor_commit(
         self,
-        deletes_keys: DataFrame,
-        inserts: DataFrame,
-        operation: str,
-        expected_version: int | None = None,
-    ) -> int:
-        """Commit a predicate DML as a MERGE-ON-READ delta layer:
-        tombstone keys + replacement images, NO table data read back
-        or rewritten beyond the predicate scan that produced them.
-        Same layer format as ``_apply_changes_mor`` (read path:
-        base ⟕̸ deletes ∪ inserts), so readers, time travel,
-        ``compact()`` folding, and vacuum's ancestor-closure retention
-        all apply unchanged. Returns the tombstoned-key count."""
+        m: Manifest,
+        matched: DataFrame,
+        assignments: dict[str, str] | None,
+    ) -> dict[str, Any]:
+        """The merge-on-read tail shared by the DML verbs: commit the
+        ``matched`` rows' keys as tombstones plus, for an UPDATE, their
+        ``assignments``-updated images as one delta layer. NO table
+        data is read back or rewritten beyond the predicate scan that
+        produced ``matched``. Same layer format as
+        ``_apply_changes_mor`` (read path: base ⟕̸ deletes ∪ inserts),
+        so readers, time travel, ``compact()`` folding, and vacuum's
+        ancestor-closure retention all apply unchanged. Anchored at
+        ``m``'s version, like the copy-on-write tail."""
         from dynamodb_zero_etl_s3tables_spark.metrics import (
             CommitMetrics,
             observe_rows,
         )
 
         t0 = time.perf_counter()
-        m = self._read_manifest()
-        snap = m.current
-        self._fence_staged(m)
-        if expected_version is not None and m.version != expected_version:
-            raise CommitConflictError(
-                f"concurrent commit: manifest advanced to v{m.version} "
-                f"after this {operation!r} predicate scan was anchored "
-                f"at v{expected_version}"
-            )
-        expected = m.version
-        delta_root = self.root / "data" / f"v{expected + 1}-{uuid.uuid4().hex[:8]}"
-        deletes_keys, obs = observe_rows(deletes_keys, name=operation)
-        deletes_keys.write.mode("overwrite").parquet(str(delta_root / "deletes"))
-        inserts.write.mode("overwrite").parquet(str(delta_root / "inserts"))
+        operation = "delete-mor" if assignments is None else "update-mor"
+        keys = list(self.spec.key_columns)
+        schema = T.StructType.fromJson(json.loads(m.current.schema_json))
+        if assignments is None:
+            inserts = self.spark.createDataFrame([], schema)
+        else:
+            matched = inserts = self._assign(matched, assignments, schema).cache()
+        try:
+            cur = self._read_manifest()
+            self._fence_staged(cur)
+            if cur.version != m.version:
+                raise CommitConflictError(
+                    f"concurrent commit: manifest advanced to v{cur.version} "
+                    f"after this {operation!r} predicate scan was anchored "
+                    f"at v{m.version}"
+                )
+            expected = cur.version
+            delta_root = self.root / "data" / f"v{expected + 1}-{uuid.uuid4().hex[:8]}"
+            deletes_keys, obs = observe_rows(matched.select(*keys), name=operation)
+            deletes_keys.write.mode("overwrite").parquet(str(delta_root / "deletes"))
+            inserts.write.mode("overwrite").parquet(str(delta_root / "inserts"))
+        finally:
+            inserts.unpersist()
         n = int(obs.get["row_count"])
-        m.snapshots.append(
+        cur.snapshots.append(
             Snapshot(
                 version=expected + 1,
                 data_dir=str(delta_root),
                 committed_at=time.time(),
                 row_count=n,
-                schema_json=snap.schema_json,
+                schema_json=cur.current.schema_json,
                 operation=operation,
                 base_version=expected,
                 delta={
@@ -1993,13 +2102,77 @@ class ManagedTable:
                 },
             )
         )
-        self._write_manifest(m, expected_version=expected)
+        self._write_manifest(cur, expected_version=expected)
         self.last_commit_metrics = CommitMetrics(
             operation=operation,
             row_count=n,
             elapsed_sec=time.perf_counter() - t0,
         )
-        return n
+        return {
+            "keys_deleted" if assignments is None else "rows_updated": n,
+            "partitions_rewritten": 0,
+            "partitions_carried": None,
+        }
+
+    @staticmethod
+    def _assign(
+        df: DataFrame,
+        assignments: dict[str, str],
+        schema: T.StructType,
+        hit=None,
+    ) -> DataFrame:
+        """Apply UPDATE ``assignments`` (column -> SQL expression in the
+        row's scope, cast to the column type) to the rows where ``hit``
+        is TRUE, or to every row when ``hit`` is None; returns the
+        table's columns in schema order."""
+        from pyspark.sql import functions as F
+
+        types = {f.name: f.dataType for f in schema.fields}
+        for col, expr in assignments.items():
+            new = F.expr(expr).cast(types[col])
+            df = df.withColumn(
+                col, new if hit is None else F.when(hit, new).otherwise(F.col(col))
+            )
+        return df.select(*[f.name for f in schema.fields])
+
+    def _check_dml(
+        self, verb: str, strategy: str, assignments: dict[str, str] | None
+    ) -> None:
+        """Refusals shared by the four DML verbs (``verb`` names the
+        public one in the error text)."""
+        if strategy not in ("copy-on-write", "merge-on-read"):
+            raise ValueError(f"unknown {verb.split('_')[0]} strategy {strategy!r}")
+        if assignments is None:
+            return
+        bad_keys = set(assignments) & set(self.spec.key_columns)
+        if bad_keys:
+            # the table is a keyed DynamoDB replica and DynamoDB key
+            # attributes are immutable (UpdateItem cannot modify them);
+            # under merge-on-read a key assignment would also tombstone
+            # the NEW key while the old row stays alive — silent
+            # duplication. Express a key move as DELETE + INSERT.
+            raise ValueError(
+                f"{verb} cannot assign key columns {sorted(bad_keys)} "
+                "— keys are immutable (DynamoDB replica semantics); "
+                "express a key change as DELETE old + INSERT new"
+            )
+        bad = set(assignments) & set(self.spec.partition_columns)
+        if bad and strategy == "copy-on-write":
+            # a row changing partitions under a pruned rewrite would
+            # need the all-partition path (MoR delta layers have no
+            # partition-dir layout, so the reshaping update is legal)
+            raise ValueError(f"{verb} cannot assign partition columns {sorted(bad)}")
+
+    def _head(self) -> tuple[Manifest, Snapshot, T.StructType]:
+        """The manifest anchor a verb plans from: (manifest, current
+        snapshot, its schema)."""
+        m = self._read_manifest()
+        snap = m.current
+        if snap is None:
+            raise FileNotFoundError(
+                f"table {self.spec.qualified_name} has no snapshots"
+            )
+        return m, snap, T.StructType.fromJson(json.loads(snap.schema_json))
 
     def delete_where(
         self,
@@ -2008,10 +2181,11 @@ class ManagedTable:
         residual_sql: str | None = None,
     ) -> dict[str, Any]:
         """Predicate DELETE (Iceberg ``DELETE FROM ... WHERE`` /
-        Delta DELETE analog) with copy-on-write FILE PRUNING:
-        partitions whose manifest values prove the conjunctive
-        predicate cannot match are CARRIED into the new snapshot as
-        metadata references — only possibly-matching partitions are
+        Delta DELETE analog) with copy-on-write FILE PRUNING: the
+        partition planner (:meth:`_plan`) tests each partition entry's
+        manifest values against the conjunctive predicate; entries
+        that provably cannot match are CARRIED into the new snapshot
+        as metadata references — only possibly-matching partitions are
         read and rewritten without their TRUE rows. ANSI semantics: a
         row whose predicate evaluates NULL is kept (DELETE removes
         only TRUE rows). Unpartitioned tables do a full CoW rewrite
@@ -2031,80 +2205,11 @@ class ManagedTable:
         every old file. Ops are the scan set (``= < <= > >=``),
         conjunctive; ``residual_sql`` carries any richer row-scope
         predicate (OR / IN / BETWEEN / functions) as an extra
-        AND-conjunct — partition pruning still keys off the triples
-        alone (sound over-approximation), so a residual-only call is
-        a full-scan rewrite, and a mixed call keeps the carry for
-        partitions the triples rule out."""
-        from pyspark.sql import functions as F
-
-        filters = list(filters)
-        pred = self._combine_predicate(filters, residual_sql)
-        keep = ~F.coalesce(pred, F.lit(False))
-        if strategy not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown delete strategy {strategy!r}")
-        if strategy == "merge-on-read":
-            m = self._read_manifest()
-            snap = m.current
-            if snap is None:
-                raise FileNotFoundError(
-                    f"table {self.spec.qualified_name} has no snapshots"
-                )
-            schema = T.StructType.fromJson(json.loads(snap.schema_json))
-            keys = list(self.spec.key_columns)
-            matching = (
-                self.read(version=snap.version)  # pinned to the anchor
-                .filter(F.coalesce(pred, F.lit(False)))
-                .select(*keys)
-            )
-            empty = self.spark.createDataFrame([], schema)
-            n = self._dml_mor_commit(
-                matching, empty, operation="delete-mor",
-                expected_version=m.version,
-            )
-            return {
-                "keys_deleted": n,
-                "partitions_rewritten": 0,
-                "partitions_carried": None,
-            }
-        m = self._read_manifest()
-        snap = m.current
-        if snap is None:
-            raise FileNotFoundError(
-                f"table {self.spec.qualified_name} has no snapshots"
-            )
-        schema = T.StructType.fromJson(json.loads(snap.schema_json))
-        by_name = {f.name: f for f in schema.fields}
-
-        if snap.partitions is not None:
-            def may_match(e: dict[str, Any]) -> bool:
-                stats = {}
-                for pc, raw in e["values"].items():
-                    v = _coerce_partition_value(raw, by_name[pc].dataType)
-                    if v is not None:
-                        stats[pc] = [v, v]
-                return all(
-                    _file_may_match(stats, col, op, val)
-                    for col, op, val in filters
-                    if col in e["values"]
-                )
-
-            touched = [e for e in snap.partitions if may_match(e)]
-            carry = [e for e in snap.partitions if not may_match(e)]
-            kept = self._read_partition_entries(touched, schema).filter(keep)
-            self._write_snapshot(
-                kept, operation="delete", carry_entries=carry,
-                expected_version=m.version,
-                carry_dropped=snap.dropped_columns if carry else None,
-            )
-            return {
-                "partitions_rewritten": len(touched),
-                "partitions_carried": len(carry),
-            }
-        self._write_snapshot(
-            self.read(version=snap.version).filter(keep),
-            operation="delete", expected_version=m.version,
-        )
-        return {"partitions_rewritten": None, "partitions_carried": None}
+        AND-conjunct — the planner prunes on the triples alone (sound
+        over-approximation), so a residual-only call is a full-scan
+        rewrite, and a mixed call keeps the carry for partitions the
+        triples rule out."""
+        return self._where_commit(filters, None, strategy, residual_sql)
 
     def update_where(
         self,
@@ -2114,15 +2219,15 @@ class ManagedTable:
         residual_sql: str | None = None,
     ) -> dict[str, Any]:
         """Predicate UPDATE (Delta ``UPDATE ... WHERE`` / Iceberg
-        row-level update analog), sharing delete_where's pruning:
-        carried partitions are metadata references, touched partitions
-        are rewritten with ``assignments`` (column -> SQL expression,
-        evaluated in the row's scope) applied ONLY to rows whose
-        predicate is TRUE (NULL/FALSE rows pass through untouched —
-        ANSI). Assignments to partition columns are rejected under
-        copy-on-write: a row changing partitions under a pruned
-        rewrite would need the all-partition path (use apply_changes
-        for reshaping writes).
+        row-level update analog), planned like delete_where (the same
+        partition planner carries the entries the triples rule out);
+        touched partitions are rewritten with ``assignments`` (column
+        -> SQL expression, evaluated in the row's scope) applied ONLY
+        to rows whose predicate is TRUE (NULL/FALSE rows pass through
+        untouched — ANSI). Assignments to partition columns are
+        rejected under copy-on-write: a row changing partitions under
+        a pruned rewrite would need the all-partition path (use
+        apply_changes for reshaping writes).
 
         ``strategy="merge-on-read"`` commits the matched rows' keys
         as tombstones plus their UPDATED images as a delta layer —
@@ -2134,123 +2239,34 @@ class ManagedTable:
         predicate range rewrites that partition only (CoW) or writes
         only the matched rows (MoR) — the update expression runs
         inside the write job, codegen'd, no extra pass."""
+        return self._where_commit(filters, assignments, strategy, residual_sql)
+
+    def _where_commit(
+        self,
+        filters: list[tuple[str, str, Any]],
+        assignments: dict[str, str] | None,
+        strategy: str,
+        residual_sql: str | None,
+    ) -> dict[str, Any]:
+        """Shared engine of :meth:`delete_where` / :meth:`update_where`."""
         from pyspark.sql import functions as F
 
-        if strategy not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown update strategy {strategy!r}")
-        bad_keys = set(assignments) & set(self.spec.key_columns)
-        if bad_keys:
-            # the table is a keyed DynamoDB replica and DynamoDB key
-            # attributes are immutable (UpdateItem cannot modify them);
-            # under merge-on-read a key assignment would also tombstone
-            # the NEW key while the old row stays alive — silent
-            # duplication. Express a key move as DELETE + INSERT.
-            raise ValueError(
-                f"update_where cannot assign key columns {sorted(bad_keys)} "
-                "— keys are immutable (DynamoDB replica semantics); "
-                "express a key change as DELETE old + INSERT new"
-            )
-        bad = set(assignments) & set(self.spec.partition_columns)
-        if bad and strategy == "copy-on-write":
-            raise ValueError(
-                f"update_where cannot assign partition columns {sorted(bad)}"
-            )
+        operation = "delete" if assignments is None else "update"
+        self._check_dml(f"{operation}_where", strategy, assignments)
         filters = list(filters)
-        pred = self._combine_predicate(filters, residual_sql)
-        m = self._read_manifest()
-        snap = m.current
-        if snap is None:
-            raise FileNotFoundError(
-                f"table {self.spec.qualified_name} has no snapshots"
-            )
-        schema = T.StructType.fromJson(json.loads(snap.schema_json))
-        by_name = {f.name: f for f in schema.fields}
-        hit = F.coalesce(pred, F.lit(False))
+        hit = F.coalesce(self._combine_predicate(filters, residual_sql), F.lit(False))
+        m, snap, schema = self._head()
         if strategy == "merge-on-read":
-            keys = list(self.spec.key_columns)
             matched = self.read(version=snap.version).filter(hit)  # pinned
-            for col, expr in assignments.items():
-                matched = matched.withColumn(
-                    col, F.expr(expr).cast(by_name[col].dataType)
-                )
-            matched = matched.select(*[f.name for f in schema.fields]).cache()
-            n = self._dml_mor_commit(
-                matched.select(*keys), matched, operation="update-mor",
-                expected_version=m.version,
-            )
-            matched.unpersist()
-            return {
-                "rows_updated": n,
-                "partitions_rewritten": 0,
-                "partitions_carried": None,
-            }
+            return self._dml_mor_commit(m, matched, assignments)
 
-        def apply_set(df: DataFrame) -> DataFrame:
-            for col, expr in assignments.items():
-                df = df.withColumn(
-                    col,
-                    F.when(hit, F.expr(expr).cast(by_name[col].dataType))
-                    .otherwise(F.col(col)),
-                )
-            return df
+        def rewrite(df: DataFrame) -> DataFrame:
+            if assignments is None:
+                return df.filter(~hit)
+            return self._assign(df, assignments, schema, hit)
 
-        if snap.partitions is not None:
-            def may_match(e: dict[str, Any]) -> bool:
-                stats = {}
-                for pc, raw in e["values"].items():
-                    v = _coerce_partition_value(raw, by_name[pc].dataType)
-                    if v is not None:
-                        stats[pc] = [v, v]
-                return all(
-                    _file_may_match(stats, col, op, val)
-                    for col, op, val in filters
-                    if col in e["values"]
-                )
-
-            touched = [e for e in snap.partitions if may_match(e)]
-            carry = [e for e in snap.partitions if not may_match(e)]
-            updated = apply_set(self._read_partition_entries(touched, schema))
-            self._write_snapshot(
-                updated, operation="update", carry_entries=carry,
-                expected_version=m.version,
-                carry_dropped=snap.dropped_columns if carry else None,
-            )
-            return {
-                "partitions_rewritten": len(touched),
-                "partitions_carried": len(carry),
-            }
-        self._write_snapshot(
-            apply_set(self.read(version=snap.version)),
-            operation="update", expected_version=m.version,
-        )
-        return {"partitions_rewritten": None, "partitions_carried": None}
-
-    @staticmethod
-    def _collected_agrees(raw: str | None, dtype: T.DataType, v: Any) -> bool:
-        """Can a collected partition value ``v`` live in an entry whose
-        manifest raw-string value is ``raw``? Comparison is attempted
-        in the raw-string domain both sides normalize to; any type this
-        normalization cannot make bit-faithful (timestamps: dir-name
-        formatting vs ``str(datetime)``) answers True — the
-        conservative direction (entry treated as touched → rewritten),
-        never a silent skip."""
-        if raw is None or v is None:
-            return (raw is None) == (v is None)
-        cv = _coerce_partition_value(raw, dtype)
-        if cv is None:
-            return True  # untyped/unsupported: cannot rule out
-        try:
-            if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-                return cv == int(v)
-            if isinstance(dtype, (T.FloatType, T.DoubleType)):
-                return cv == float(v)
-            if isinstance(dtype, T.StringType):
-                return cv == str(v)
-            if isinstance(dtype, T.DateType):
-                return cv == str(v)  # ISO both sides
-        except (TypeError, ValueError):
-            return True
-        return True
+        plan = self._plan(snap, schema, filters=filters)
+        return self._cow_commit(m, plan, schema, rewrite, operation)
 
     def _matching_commit(
         self,
@@ -2266,19 +2282,20 @@ class ManagedTable:
         joins) down to a key-set DataFrame; this commits the rewrite.
 
         Copy-on-write pruning here is DATA-driven, not triple-driven:
-        one narrow scan (keys + partition columns only — Catalyst
-        prunes the rest) joins the key set to find which partitions
-        hold matching rows; untouched entries are CARRIED as metadata
-        references exactly as delete_where does, so a cleanup that
-        hits 1 of 500 partitions rewrites 1. The collected set is
-        bounded by live-partition count (metadata scale). Merge-on-read
-        commits tombstones (+ updated images) in O(matches) with zero
-        rewrite — the 100 TB shape for hot subquery deletes."""
+        the partition planner (:meth:`_plan`) collects the partition
+        values of the rows the key set hits — one narrow scan (keys +
+        partition columns only — Catalyst prunes the rest) joined to
+        the key set — and each entry matches on its own value keys;
+        untouched entries are CARRIED as metadata references exactly
+        as delete_where does, so a cleanup that hits 1 of 500
+        partitions rewrites 1. The collected set is bounded by
+        live-partition count (metadata scale). Merge-on-read commits
+        tombstones (+ updated images) in O(matches) with zero rewrite
+        — the 100 TB shape for hot subquery deletes."""
         from pyspark.sql import functions as F
 
         operation = "delete" if assignments is None else "update"
-        if strategy not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(f"unknown {operation} strategy {strategy!r}")
+        self._check_dml(f"{operation}_matching", strategy, assignments)
         kcols = list(self.spec.key_columns)
         missing = [k for k in kcols if k not in keys.columns]
         if missing:
@@ -2286,29 +2303,7 @@ class ManagedTable:
                 f"{operation}_matching needs the table's key columns "
                 f"{kcols} in the key set; missing {missing}"
             )
-        if assignments is not None:
-            bad_keys = set(assignments) & set(kcols)
-            if bad_keys:
-                raise ValueError(
-                    f"update_matching cannot assign key columns "
-                    f"{sorted(bad_keys)} — keys are immutable (DynamoDB "
-                    "replica semantics); express a key change as DELETE "
-                    "old + INSERT new"
-                )
-            bad = set(assignments) & set(self.spec.partition_columns)
-            if bad and strategy == "copy-on-write":
-                raise ValueError(
-                    f"update_matching cannot assign partition columns "
-                    f"{sorted(bad)}"
-                )
-        m = self._read_manifest()
-        snap = m.current
-        if snap is None:
-            raise FileNotFoundError(
-                f"table {self.spec.qualified_name} has no snapshots"
-            )
-        schema = T.StructType.fromJson(json.loads(snap.schema_json))
-        by_name = {f.name: f for f in schema.fields}
+        m, snap, schema = self._head()
         # Partition-value columns RIDING the key set (the SQL door
         # selects them alongside the keys from the same WHERE scan —
         # guide §1.2/§2.4: the prune info comes out of the pass that
@@ -2339,39 +2334,14 @@ class ManagedTable:
         # two Sorts for it. Instead the rewrite joins (the only
         # consumers that duplicate rows on duplicate keys) dedup the
         # key columns alone (HashAggregate), semi joins need no dedup
-        # at all, and the prune set distincts the partition values
+        # at all, and the planner distincts the partition values
         # directly (duplicates collapse there anyway).
         keys = keys.select(*kcols, *ride)
 
         if strategy == "merge-on-read":
             base = self.read(version=snap.version)  # pinned anchor
             matched = base.join(keys, kcols, "left_semi")
-            if assignments is None:
-                empty = self.spark.createDataFrame([], schema)
-                n = self._dml_mor_commit(
-                    matched.select(*kcols), empty, operation="delete-mor",
-                    expected_version=m.version,
-                )
-                return {
-                    "keys_deleted": n,
-                    "partitions_rewritten": 0,
-                    "partitions_carried": None,
-                }
-            for col, expr in assignments.items():
-                matched = matched.withColumn(
-                    col, F.expr(expr).cast(by_name[col].dataType)
-                )
-            matched = matched.select(*[f.name for f in schema.fields]).cache()
-            n = self._dml_mor_commit(
-                matched.select(*kcols), matched, operation="update-mor",
-                expected_version=m.version,
-            )
-            matched.unpersist()
-            return {
-                "rows_updated": n,
-                "partitions_rewritten": 0,
-                "partitions_carried": None,
-            }
+            return self._dml_mor_commit(m, matched, assignments)
 
         def rewrite(df: DataFrame) -> DataFrame:
             # dedupe: several subquery matches per key must not
@@ -2379,87 +2349,33 @@ class ManagedTable:
             kset = keys.select(*kcols).dropDuplicates(kcols)
             if assignments is None:
                 return df.join(kset, kcols, "left_anti")
-            j = df.join(
-                kset.withColumn("__hit", F.lit(True)),
-                kcols,
-                "left_outer",
-            )
+            j = df.join(kset.withColumn("__hit", F.lit(True)), kcols, "left_outer")
             hit = F.coalesce(F.col("__hit"), F.lit(False))
-            for col, expr in assignments.items():
-                j = j.withColumn(
-                    col,
-                    F.when(hit, F.expr(expr).cast(by_name[col].dataType))
-                    .otherwise(F.col(col)),
-                )
-            return j.select(*[f.name for f in schema.fields])
+            return self._assign(j, assignments, schema, hit)
 
-        if snap.partitions is not None:
-            # data-driven prune: which partitions hold a matching row?
-            # The key set feeds TWO consumers (the prune scan and the
-            # rewrite join) — cache it so the subquery plan that
-            # produced it evaluates once, not twice (spills to disk if
-            # the match set is large; released before returning).
-            keys = keys.cache()
-            try:
-                pcols = sorted(
-                    {
-                        pc
-                        for e in snap.partitions
-                        for pc in e["values"]
-                        if pc in by_name
-                    }
+        if snap.partitions is None:
+            return self._cow_commit(m, None, schema, rewrite, operation)
+        # The key set feeds TWO consumers (the planner's probe and the
+        # rewrite join) — cache it so the subquery plan that produced
+        # it evaluates once, not twice (spills to disk if the match
+        # set is large; released before returning).
+        keys = keys.cache()
+        try:
+            laid = {pc for e in snap.partitions for pc in e["values"]}
+            # riding values (SQL-door fast path) make the probe a
+            # distinct over the CACHED key frame — no second
+            # full-table scan; otherwise semi-join the table
+            probe = (
+                keys
+                if laid <= set(keys.columns)
+                else self.read(version=snap.version).join(
+                    keys.select(*kcols), kcols, "left_semi"
                 )
-                if pcols and all(pc in keys.columns for pc in pcols):
-                    # the key set already carries the matched rows'
-                    # partition values (SQL-door fast path): the prune
-                    # set is a distinct over the CACHED key frame — no
-                    # second full-table scan, no semi-join (r10 opt)
-                    rows = keys.select(*pcols).distinct().collect()
-                elif pcols:
-                    rows = (
-                        self.read(version=snap.version)
-                        .join(keys.select(*kcols), kcols, "left_semi")
-                        .select(*pcols)
-                        .distinct()
-                        .collect()
-                    )
-                else:
-                    rows = []
-                vals = [r.asDict() for r in rows]
-
-                def may_match(e: dict[str, Any]) -> bool:
-                    if not vals:
-                        return not pcols  # no layout info -> rewrite all
-                    return any(
-                        all(
-                            pc not in r
-                            or self._collected_agrees(
-                                raw, by_name[pc].dataType, r[pc]
-                            )
-                            for pc, raw in e["values"].items()
-                        )
-                        for r in vals
-                    )
-
-                touched = [e for e in snap.partitions if may_match(e)]
-                carry = [e for e in snap.partitions if not may_match(e)]
-                out = rewrite(self._read_partition_entries(touched, schema))
-                self._write_snapshot(
-                    out, operation=operation, carry_entries=carry,
-                    expected_version=m.version,
-                    carry_dropped=snap.dropped_columns if carry else None,
-                )
-            finally:
-                keys.unpersist()
-            return {
-                "partitions_rewritten": len(touched),
-                "partitions_carried": len(carry),
-            }
-        self._write_snapshot(
-            rewrite(self.read(version=snap.version)),
-            operation=operation, expected_version=m.version,
-        )
-        return {"partitions_rewritten": None, "partitions_carried": None}
+            )
+            plan = self._plan(snap, schema, touched=probe)
+            return self._cow_commit(m, plan, schema, rewrite, operation)
+        finally:
+            keys.unpersist()
 
     def delete_matching(
         self,
@@ -3211,7 +3127,7 @@ class ManagedTable:
         plan (on partitioned tables it rewrites every partition,
         unlike apply_changes' pruned path — a pruned staged variant
         would carry untouched partition dirs exactly as
-        _apply_changes_pruned does); audit reads only the staged
+        apply_changes' planner does); audit reads only the staged
         snapshot; publish and abort are O(manifest)."""
         m = self._read_manifest()
         self._fence_staged(m)  # early exit before the merge is computed

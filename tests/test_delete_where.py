@@ -6,6 +6,7 @@ partitions are read and rewritten. ANSI semantics: a row whose
 predicate evaluates NULL is KEPT (DELETE removes only TRUE rows).
 Unpartitioned tables do a full CoW rewrite (documented)."""
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -180,3 +181,44 @@ def test_update_respects_constraints(spark, warehouse):
     with pytest.raises(ConstraintViolationError):
         t.update_where([("pk", "<", 10)], {"x": "-1.0"})
     assert t.version == v
+
+
+# ---------------------------------------------------------------------------
+# NaN: Spark orders NaN above every number and treats NaN = NaN as
+# true, so pruning must never rule a NaN partition value, file bound
+# or filter value out
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "layout, filters",
+    [
+        ("partitioned", [("p", "=", float("nan"))]),
+        ("partitioned", [("p", ">", 2.0)]),
+        ("flat", [("p", ">", 2.0)]),  # one file with stats [0.5, NaN]
+    ],
+)
+def test_nan_never_prunes(spark, warehouse, layout, filters):
+    partitioned = layout == "partitioned"
+    t = ManagedTable(
+        spark, warehouse,
+        TableSpec(namespace="ns", name="nan", key_columns=("pk",),
+                  partition_columns=("p",) if partitioned else ()),
+    )
+    values = [1.5, float("nan"), 2.5] if partitioned else [0.5, float("nan")]
+    t.bootstrap(
+        spark.createDataFrame(list(enumerate(values)), "pk long, p double").coalesce(1)
+    )
+    pred = ManagedTable._predicate_from_filters(filters)
+
+    def rows(df):
+        # NaN != NaN in Python: compare it by name
+        return sorted((r.pk, "NaN" if r.p != r.p else r.p) for r in df.collect())
+
+    before = t.read(version=1)
+    assert rows(t.scan(filters)) == rows(before.filter(pred))
+    t.delete_where(filters)
+    assert rows(t.read()) == rows(before.filter(~pred))
+    t.rollback_to(1)
+    t.delete_matching(before.filter(pred).select("pk"))
+    assert rows(t.read()) == rows(before.filter(~pred))

@@ -116,3 +116,27 @@ def test_mor_update_allows_partition_column_assignment(spark, warehouse):
                    strategy="merge-on-read")
     got = {r.pk: r.status for r in t.read().collect()}
     assert got == {1: "C", 2: "B"}
+
+
+def test_mor_merge_jobs_stay_in_callers_job_group(spark, warehouse):
+    """The merge-on-read commit writes its two delta files from a
+    thread pool; those jobs must carry the caller's job group, so no
+    job of the commit lands outside it."""
+    t = _tbl(spark, warehouse, "mgroup")
+    changes = spark.createDataFrame(
+        [("MODIFY", 1, 1, "A", 11.0), ("REMOVE", 1, 2, "B", 0.0)],
+        "op string, seq long, pk long, status string, price double",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("mor-merge-test", "MoR apply_changes")
+    try:
+        t.apply_changes(changes, order_cols=("seq",), strategy="merge-on-read")
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(tracker.getJobIdsForGroup("mor-merge-test")) >= 2
+    assert {r.pk: r.price for r in t.read().collect()}[1] == 11.0

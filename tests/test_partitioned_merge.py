@@ -4,7 +4,10 @@ carry forward by reference (same paths), results match a full merge,
 time travel stays intact, and vacuum respects shared dirs."""
 
 import time
+from datetime import date, datetime
+from decimal import Decimal
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -126,3 +129,77 @@ def test_second_pruned_merge_chains(spark, warehouse):
     assert v3[("C",)] != v2[("C",)]
     rows = {(r["pk"], r["price"]) for r in t.read().collect()}
     assert (7, 777.0) in rows and (1, 111.0) in rows
+
+
+# one value per partition: the verbs below target the first one
+_TYPED_PARTITIONS = {
+    "int": ("int", [1, 2, 3]),
+    "double": ("double", [1.5, -0.0, 2.5]),
+    "decimal": (
+        "decimal(10,2)",
+        [Decimal("1.50"), Decimal("-3.00"), Decimal("2.25")],
+    ),
+    "date": ("date", [date(2024, 1, 1), date(2024, 2, 29), date(2023, 12, 31)]),
+    "timestamp": (
+        "timestamp",
+        [
+            datetime(2024, 1, 1, 10, 0, 0, 123000),
+            datetime(2024, 1, 1, 10, 0, 0, 500000),
+            datetime(2024, 6, 1),
+        ],
+    ),
+    "boolean": ("boolean", [True, False, None]),
+    "null": ("string", ["x", "y", None]),
+}
+
+
+@pytest.mark.parametrize("kind", list(_TYPED_PARTITIONS))
+def test_typed_partition_verbs_rewrite_one_of_three(spark, warehouse, kind):
+    """Every planner route — CoW merge, predicate DELETE and keyed
+    DELETE/UPDATE — rewrites only the one partition it touches and
+    carries the other two, whatever the partition column's type, and
+    leaves the rows a full rewrite would."""
+    ddl, (v0, v1, v2) = _TYPED_PARTITIONS[kind]
+    t = ManagedTable(
+        spark, warehouse,
+        TableSpec(namespace="ns", name=f"typed_{kind}", key_columns=("pk",),
+                  partition_columns=("p",), order_columns=("seq",)),
+    )
+    schema = f"pk long, p {ddl}, x double"
+    t.bootstrap(spark.createDataFrame(
+        [(1, v0, 1.0), (2, v0, 2.0), (3, v0, 3.0), (4, v1, 4.0), (5, v2, 5.0)],
+        schema,
+    ))
+
+    def rows():
+        return sorted(tuple(r) for r in t.read().collect())
+
+    def split():
+        m = t._read_manifest()
+        before = {e["dir"] for e in m.snapshots[-2].partitions}
+        now = [e["dir"] for e in m.current.partitions]
+        carried = sum(d in before for d in now)
+        return {"partitions_rewritten": len(now) - carried, "partitions_carried": carried}
+
+    one_of_three = {"partitions_rewritten": 1, "partitions_carried": 2}
+    ref = {r[0]: r for r in rows()}
+
+    changes = spark.createDataFrame([("MODIFY", 1, 1, v0, 10.0)], f"op string, seq long, {schema}")
+    t.apply_changes(changes)
+    assert split() == one_of_three
+    ref[1] = (1, v0, 10.0)
+    assert rows() == sorted(ref.values())
+
+    assert t.delete_where([("p", "=", v0), ("pk", "=", 2)]) == one_of_three
+    del ref[2]
+    assert rows() == sorted(ref.values())
+
+    keys = spark.createDataFrame([(3,)], "pk long")
+    assert t.delete_matching(keys) == one_of_three
+    del ref[3]
+    assert rows() == sorted(ref.values())
+
+    keys = spark.createDataFrame([(1,)], "pk long")
+    assert t.update_matching(keys, {"x": "x + 1"}) == one_of_three
+    ref[1] = (1, v0, 11.0)
+    assert rows() == sorted(ref.values())
