@@ -20,6 +20,7 @@ turning full scans into bucket scans.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -254,7 +255,6 @@ def e03c_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row driver-side constant captured in the closure, i.e. a
     broadcast."""
     import numpy as np
-    import pandas as pd
 
     e = load(spark, sf_dir, "embeddings")
     qrow = e.filter(F.col("vec_id") == 0).first()
@@ -418,7 +418,6 @@ def buckets_udf(planes: list[list[list[int]]]):
     :func:`bucket_col` and of the DuckDB oracle's ``list_reduce`` —
     bucket signs stay bit-identical across all three."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType
 
     n_tables, n_planes = len(planes), len(planes[0])
@@ -434,8 +433,8 @@ def buckets_udf(planes: list[list[list[int]]]):
 
     zeros = np.zeros(n_tables, dtype=np.int32)
 
-    @F.pandas_udf(ArrayType(IntegerType()), F.PandasUDFType.SCALAR)
-    def _buckets(emb):
+    @F.pandas_udf(ArrayType(IntegerType()))
+    def _buckets(emb: pd.Series) -> pd.Series:
         vals = emb.to_numpy()
         # NULL embeddings bucket to 0 per table — the expression fold's
         # behavior (NULL projection -> when(NULL > 0) -> otherwise 0),

@@ -63,6 +63,7 @@ every invocation.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -196,14 +197,14 @@ def _project(frame: DataFrame, version: int, stream_fields, shimmed) -> DataFram
     return frame.select(*cols)
 
 
-def _write_one_file(df: DataFrame, stage_dir: str, version: int) -> None:
-    """Write ``df`` as exactly ONE staged parquet file with a
-    version-monotonic mtime (one file == one microbatch under
-    ``maxFilesPerTrigger=1``; the mtime makes oldest-first listing ==
-    version order)."""
+def _write_one_file(df: DataFrame, stage_dir: str, version: int) -> str:
+    """Write ``df`` as exactly ONE parquet file (one file == one
+    microbatch under ``maxFilesPerTrigger=1``) under a pending name
+    that listings skip (leading ``_``); returns its path.
+    :func:`materialize_changelog` moves it into place."""
     tmp = os.path.join(stage_dir, f"_tmp_v{version}")
     df.repartition(1).write.mode("overwrite").parquet(tmp)
-    dest = os.path.join(stage_dir, f"v{version:09d}.parquet")
+    dest = _pending_path(stage_dir, version)
     parts = sorted(glob.glob(os.path.join(tmp, "part-*.parquet")))
     if parts:
         os.replace(parts[0], dest)
@@ -223,15 +224,21 @@ def _write_one_file(df: DataFrame, stage_dir: str, version: int) -> None:
             dest,
         )
     shutil.rmtree(tmp, ignore_errors=True)
-    ts = _MTIME_BASE + version
-    os.utime(dest, (ts, ts))
+    return dest
+
+
+def _pending_path(stage_dir: str, version: int) -> str:
+    return os.path.join(stage_dir, f"_pending_v{version:09d}.parquet")
 
 
 def materialize_changelog(table, stage_dir: str) -> int:
     """Stage the changelog of ``table`` as one parquet file per
     published version under ``stage_dir`` (module docstring).
-    Incremental: already-staged versions are skipped. Returns the
-    number of NEW files written."""
+    Incremental: already-staged versions are skipped. All or nothing:
+    the pending versions are written under hidden names and moved into
+    place, in version order, only once every one of them succeeded, so
+    a failed version never leaves a later one staged past a hole.
+    Returns the number of NEW files written."""
     os.makedirs(stage_dir, exist_ok=True)
     staged = {
         int(mm.group(1))
@@ -255,32 +262,51 @@ def materialize_changelog(table, stage_dir: str) -> int:
     if not pending:
         return 0
 
-    def _stage_one(snap, prev) -> None:
+    def _stage_one(snap, prev) -> str:
         frame = _emit_frame(table, snap, prev)
         out = _project(frame, snap.version, stream_schema.fields, shimmed)
-        _write_one_file(out, stage_dir, snap.version)
+        return _write_one_file(out, stage_dir, snap.version)
 
-    if len(pending) == 1:
-        _stage_one(*pending[0])
-    else:
-        # the per-version staging jobs are INDEPENDENT (each reads its
-        # own version pair and writes its own file), so overlap them:
-        # a later job's tasks back-fill executors freed by an earlier
-        # job's tail, hiding the per-job launch constants (guide §2.6).
-        # Each task runs under a copy of the caller's local properties
-        # (job group — inside foreachBatch, the stream's runId group),
-        # so its jobs are the caller's.
-        from concurrent.futures import ThreadPoolExecutor
+    try:
+        if len(pending) == 1:
+            paths = [_stage_one(*pending[0])]
+        else:
+            # the per-version staging jobs are INDEPENDENT (each reads
+            # its own version pair and writes its own file), so overlap
+            # them: a later job's tasks back-fill executors freed by an
+            # earlier job's tail, hiding the per-job launch constants
+            # (guide §2.6). Each task runs under a copy of the caller's
+            # local properties (job group — inside foreachBatch, the
+            # stream's runId group), so its jobs are the caller's.
+            from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
+            from pyspark import inheritable_thread_target
 
-        with ThreadPoolExecutor(max_workers=min(4, len(pending))) as pool:
-            futures = [
-                pool.submit(inheritable_thread_target(table.spark)(_stage_one), s, p)
-                for s, p in pending
-            ]
-            for f in futures:
-                f.result()  # propagate the first failure
+            with ThreadPoolExecutor(max_workers=min(4, len(pending))) as pool:
+                futures = [
+                    pool.submit(
+                        inheritable_thread_target(table.spark)(_stage_one), s, p
+                    )
+                    for s, p in pending
+                ]
+                paths = [f.result() for f in futures]  # first failure raises
+    except BaseException:
+        # all or nothing: a later version staged while an earlier one
+        # failed would leave a hole the file stream drains past
+        for snap, _ in pending:
+            shutil.rmtree(
+                os.path.join(stage_dir, f"_tmp_v{snap.version}"), ignore_errors=True
+            )
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(_pending_path(stage_dir, snap.version))
+        raise
+    # publish in version order, each with a version-monotonic mtime
+    # (the file stream's oldest-first listing is then version order)
+    for (snap, _), path in zip(pending, paths):
+        dest = os.path.join(stage_dir, f"v{snap.version:09d}.parquet")
+        os.replace(path, dest)
+        ts = _MTIME_BASE + snap.version
+        os.utime(dest, (ts, ts))
     return len(pending)
 
 

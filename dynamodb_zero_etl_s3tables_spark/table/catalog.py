@@ -113,7 +113,11 @@ class Catalog:
 
     def refresh_view(self, qualified_name: str, version: int | None = None) -> str:
         """(Re-)register the table's current (or time-traveled)
-        snapshot as a temp view; returns the view name."""
+        snapshot as a temp view; returns the view name. A partitioned
+        copy-on-write snapshot is one Parquet relation (see
+        ``ManagedTable._read_partition_entries``), so the refresh costs
+        one driver-side file listing and a query over the view plans
+        one FileScan with Spark's own partition pruning."""
         t = self.table(qualified_name)
         name = self.view_name(qualified_name)
         t.read(version=version).createOrReplaceTempView(name)

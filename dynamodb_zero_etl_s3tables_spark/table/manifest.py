@@ -479,7 +479,8 @@ class _Plan(NamedTuple):
     #: entries a commit references unchanged in the next snapshot
     carry: list[dict[str, Any]]
     #: ``touched`` narrowed to the files that survive min/max + bloom
-    #: skipping (``read_files``), for scan; fully skipped entries drop
+    #: skipping (``read_files``, set only when a file was skipped), for
+    #: scan; fully skipped entries drop
     read: list[dict[str, Any]]
     #: the scan counts (``last_scan_metrics``)
     metrics: dict[str, Any]
@@ -829,59 +830,77 @@ class ManagedTable:
     def _read_partition_entries(
         self, entries: list[dict[str, Any]], schema: T.StructType
     ) -> DataFrame:
-        """Assemble a snapshot from per-partition dirs: read each dir
-        with the file schema (missing evolved columns surface as NULL),
-        re-attach the partition-column values from the manifest entry.
+        """Assemble a snapshot from partition entries as ONE Parquet
+        relation per group of entries that share a layout and a
+        ``renames`` mapping — in the common case one relation for the
+        whole snapshot, so SQL plans a single FileScan with Spark's own
+        ``PartitionFilters`` (the one-scan-per-table shape Athena gets
+        from the Iceberg manifest, reference ts:77-79).
+
         Each entry's OWN value keys define its layout — after
         partition-spec evolution, carried entries keep the layout they
-        were written under (Iceberg's per-file spec-id semantic) and
-        still read correctly; likewise each entry's own ``renames``
-        mapping (file-name -> current-name, the per-entry rename
-        analog of the snapshot-level ``read_renames``) binds the read
-        to the names its files actually store — carried entries keep
-        old names after a rename while freshly rewritten entries use
-        current names, so a snapshot legally mixes both. One relation
-        per live partition — bounded by partition count, which is
-        metadata-scale by design."""
-        from pyspark.sql import functions as F
+        were written under (Iceberg's per-file spec-id semantic);
+        likewise each entry's own ``renames`` mapping (file-name ->
+        current-name, the per-entry analog of the snapshot-level
+        ``read_renames``) binds the read to the names its files store —
+        carried entries keep old names after a rename while freshly
+        rewritten entries use current names. Entries differing in
+        either are read as separate relations, unioned by name.
 
+        Within a group the files are read with the file schema (missing
+        evolved columns surface as NULL) plus the partition fields;
+        Spark parses the partition values from the ``col=value`` dir
+        names, typed by the table schema in the session time zone.
+        ``basePath`` is the common ancestor of the entries' layout
+        roots, and ``ignoreInvalidPartitionPaths`` lets one relation
+        span several roots: a copy-on-write head's entries live under
+        several ``data/v*-…`` dirs, and a shallow clone's under another
+        table's root, which Spark otherwise refuses as conflicting
+        directory structures. An entry is read by its dir unless a
+        pruned scan narrowed it to ``read_files``."""
+        groups: dict[tuple, list[dict[str, Any]]] = {}
+        for ent in entries:
+            ren = tuple(
+                sorted(
+                    (fc, cur)
+                    for fc, cur in (ent.get("renames") or {}).items()
+                    if fc != cur
+                )
+            )
+            groups.setdefault((tuple(ent["values"]), ren), []).append(ent)
         by_name = {f.name: f for f in schema.fields}
         parts: list[DataFrame] = []
-        for ent in entries:
-            e_pcols = list(ent["values"].keys())
-            ren = {
-                fc: cur
-                for fc, cur in (ent.get("renames") or {}).items()
-                if fc != cur
-            }
-            inv = {cur: fc for fc, cur in ren.items()}
+        for (pcols, ren), ents in groups.items():
+            inv = {cur: fc for fc, cur in ren}
             file_schema = T.StructType(
                 [
                     T.StructField(
                         inv.get(f.name, f.name), f.dataType, f.nullable, f.metadata
                     )
                     for f in schema.fields
-                    if f.name not in e_pcols
+                    if f.name not in pcols
                 ]
+                + [by_name[pc] for pc in pcols]
             )
-            # a pruned scan narrows the entry to specific files
-            src = ent.get("read_files") or [ent["dir"]]
-            df = self.spark.read.schema(file_schema).parquet(*src)
-            if ren:
-                # one simultaneous substitution — sequential renames
-                # break on cyclic mappings (see _apply_read_renames)
-                df = df.select(
-                    *[_qcol(c).alias(ren.get(c, c)) for c in df.columns]
+            roots = [
+                str(Path(e["dir"]).parents[len(pcols) - 1]) if pcols else e["dir"]
+                for e in ents
+            ]
+            df = (
+                self.spark.read.schema(file_schema)
+                .option("basePath", os.path.commonpath(roots))
+                .option("ignoreInvalidPartitionPaths", "true")
+                .parquet(*[p for e in ents for p in e.get("read_files") or [e["dir"]]])
+            )
+            # back into schema order (Spark places partition columns
+            # last) under current names, as ONE simultaneous
+            # substitution — sequential renames break on cyclic
+            # mappings (see _apply_read_renames)
+            parts.append(
+                df.select(
+                    *[_qcol(inv.get(f.name, f.name)).alias(f.name) for f in schema.fields]
                 )
-            for pc in e_pcols:
-                raw = ent["values"][pc]
-                lit = (
-                    F.lit(None).cast(by_name[pc].dataType)
-                    if raw is None
-                    else F.lit(raw).cast(by_name[pc].dataType)
-                )
-                df = df.withColumn(pc, lit)
-            parts.append(df.select(*[f.name for f in schema.fields]))
+            )
         if not parts:
             return self.spark.createDataFrame([], schema)
         out = parts[0]
@@ -1114,6 +1133,12 @@ class ManagedTable:
         ``to_version`` defaults to the PUBLISHED head — a staged (WAP)
         snapshot must never leak through the incremental surface (its
         version number is even reused if the audit aborts it).
+
+        Between two copy-on-write snapshots with the same schema, only
+        the partition entries that differ are read: an entry both
+        snapshots reference unchanged (same dir, values and renames)
+        holds the same rows on both sides, and since a key lives in
+        exactly one entry per snapshot, none of its rows can change.
         """
         from pyspark.sql import functions as F
 
@@ -1125,8 +1150,36 @@ class ManagedTable:
                     f"table {self.spec.qualified_name} has no published snapshots"
                 )
             to_version = cur.version
-        old = self.read(version=from_version)
-        new = self.read(version=to_version)
+        by_v = {s.version: s for s in m.snapshots}
+        a, b = by_v.get(from_version), by_v.get(to_version)
+        if (
+            a is not None
+            and b is not None
+            and a.partitions is not None
+            and b.partitions is not None
+            and a.schema_json == b.schema_json
+        ):
+
+            def ident(e: dict[str, Any]) -> tuple[str, str, str]:
+                return (
+                    e["dir"],
+                    json.dumps(e["values"], sort_keys=True),
+                    json.dumps(e.get("renames") or {}, sort_keys=True),
+                )
+
+            shared = {ident(e) for e in a.partitions} & {
+                ident(e) for e in b.partitions
+            }
+            schema = T.StructType.fromJson(json.loads(b.schema_json))
+            old, new = (
+                self._read_partition_entries(
+                    [e for e in s.partitions if ident(e) not in shared], schema
+                )
+                for s in (a, b)
+            )
+        else:
+            old = self.read(version=from_version)
+            new = self.read(version=to_version)
         keys = list(self.spec.key_columns)
         # schema evolution between versions: align old to new additively
         for f in new.schema.fields:
@@ -1299,7 +1352,12 @@ class ManagedTable:
             kept = [f["path"] for f in files if _file_may_match(f, filters, e["values"])]
             files_total += len(files)
             files_read += len(kept)
-            if kept:
+            if len(kept) == len(files):
+                # the dir holds exactly these files: one root path, not
+                # one per file (Spark lists more than
+                # parallelPartitionDiscovery.threshold roots with a job)
+                read.append(e)
+            elif kept:
                 read.append({**e, "read_files": kept})
         return _Plan(
             touched=use,
