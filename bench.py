@@ -17,7 +17,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from dynamodb_zero_etl_s3tables_spark.session import get_spark
+from dynamodb_zero_etl_s3tables_spark.session import get_spark, local_cpus
 from dynamodb_zero_etl_s3tables_spark.operators import QUERY_REGISTRY
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -244,7 +244,7 @@ def _calibration(spark, n_runs: int = 3) -> float:
 
 
 def main() -> None:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     spark = get_spark(app_name="bench")
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}

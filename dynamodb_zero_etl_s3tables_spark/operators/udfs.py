@@ -37,7 +37,7 @@ def d49_scalar_python_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decimal import ROUND_HALF_UP, Decimal
 
     @F.udf(T.DoubleType())
-    def with_tax(price: float) -> float:
+    def with_tax(price):
         if price is None:
             # the NULL propagation every JVM builtin gets for free —
             # Decimal(str(None)) would crash the executor where the

@@ -67,6 +67,13 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def local_cpus() -> str:
+    """Cores of the local master: ``$SPARK_GRAFT_CPUS`` when set, else
+    the cores this process may run on (its CPU affinity, which honours
+    taskset and container cpusets)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "ddb-zero-etl-s3tables-spark",
     master: str | None = None,
@@ -74,14 +81,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    Local default: ``local[$SPARK_GRAFT_CPUS]`` threads, shuffle
+    Local default: ``local[<local_cpus()>]`` threads, shuffle
     partitions matched to cores (not the 200 default, which makes tiny
     tasks locally; on a cluster pass an explicit larger value).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -26,8 +26,8 @@ backlog merges as ONE batch, where the in-batch LWW is exact.
 
 For continuous tailing or per-file triggers WITHOUT producer-side
 ordering, pass ``tolerate_out_of_order=True`` (r8 verdict #2):
-:class:`VersionState` persists a per-key max-``order_cols`` side
-table next to the checkpoint, each microbatch drops rows at or below
+:class:`VersionState` persists the seen ``(keys, order_cols)``
+versions next to the checkpoint, each microbatch drops rows at or below
 the key's already-applied version (so a stale MODIFY delivered after
 its key's REMOVE cannot resurrect the row, and a stale REMOVE cannot
 delete a newer image), and the final table equals the one-big-batch
@@ -123,9 +123,9 @@ _DELTA_DIR_RE = re.compile(r"^delta_v(\d{20})$")
 
 class VersionState:
     """Cross-batch per-key version memory for an unordered change
-    feed: one tiny keyed table ``(keys..., order_cols...)`` holding
-    the highest already-applied version per key, snapshotted per
-    microbatch next to the stream's checkpoint.
+    feed: one tiny table ``(keys..., order_cols...)`` of already-seen
+    versions, whose highest row per key is the key's applied version,
+    persisted per microbatch next to the stream's checkpoint.
 
     Why it exists: ``merge_changes`` drops every base row whose key a
     batch touches and installs the batch's in-batch-latest image —
@@ -154,20 +154,24 @@ class VersionState:
     watermark semantics) and state entries below the watermark are
     GC'd — the exact pairing that keeps forgetting safe: any admitted
     row for a forgotten key is provably newer than the forgotten
-    entry. The per-batch filter is one equi-join of the batch against
-    the small state (broadcast when small, key-partitioned otherwise)
-    — no extra shuffle of the table itself.
+    entry. The per-batch filter is one left anti-join of the batch
+    against the small state (broadcast when small, key-partitioned
+    otherwise) — no extra shuffle of the table itself.
 
     Persistence is INCREMENTAL (r10, VERDICT r9 #7): each batch writes
-    only its own latest-per-key versions as a ``delta_v<batch>`` file
-    — an O(batch) write — and every ``compact_every`` batches the
-    base + pending deltas fold into a fresh ``state_v<batch>`` full
-    snapshot (with watermark GC applied there), off the per-batch hot
-    path. A hot feed with a wide horizon no longer pays an O(state)
-    single-task rewrite per microbatch. Loading state folds the
-    newest prior full snapshot with the (bounded by ``compact_every``)
-    deltas above it via one latest-per-key window over state-sized
-    rows.
+    only its own raw ``(keys..., order_cols...)`` rows as a
+    ``delta_v<batch>`` file — an O(batch) write with no shuffle — and
+    every ``compact_every`` batches the base + pending deltas fold
+    latest-per-key into a fresh ``state_v<batch>`` full snapshot (with
+    watermark GC applied there), off the per-batch hot path. A hot
+    feed with a wide horizon no longer pays an O(state) single-task
+    rewrite per microbatch. Loading state is ONE Parquet relation over
+    the newest prior full snapshot and the deltas above it, read with
+    the state schema given: the batch's job count does not grow with
+    the number of pending deltas. A key may hold several state rows
+    until the next compaction; the anti-join rejects a batch row if
+    ANY of them is at or above it, which equals comparing against the
+    key's max.
 
     Contract: order-column values must be NON-NULL on every change
     row (the same requirement the LWW merge itself has — a NULL
@@ -236,34 +240,30 @@ class VersionState:
             .drop("__rn")
         )
 
-    def _load_before(self, batch_id: int) -> DataFrame | None:
-        """State as of BEFORE ``batch_id``: the newest full snapshot
-        below it folded with the per-batch deltas above that snapshot
-        (latest-per-key window; the delta count is bounded by
-        ``compact_every``). Snapshots/deltas at or past the current
-        batch id are a crashed previous attempt of this very batch and
-        must be ignored (replay reads its PRIOR state)."""
+    def _load_before(
+        self, batch_id: int, schema: T.StructType
+    ) -> DataFrame | None:
+        """State as of BEFORE ``batch_id``: ONE relation over the
+        newest full snapshot below it and the raw per-batch deltas above
+        that snapshot (at most ``compact_every`` of them). A key may
+        hold several rows; admission compares against all of them, so
+        no latest-per-key fold is needed here. ``schema`` is the
+        ``(keys..., order_cols...)`` shape every state file was written
+        with, so the read infers nothing (no footer job per dir).
+        Snapshots/deltas at or past the current batch id are a crashed
+        previous attempt of this very batch and must be ignored (replay
+        reads its PRIOR state)."""
         prior = [s for s in self._snapshots() if s < batch_id]
         base_v = prior[-1] if prior else None
-        deltas = [
-            d
+        paths = [self._path(base_v)] if base_v is not None else []
+        paths.extend(
+            self._delta_path(d)
             for d in self._deltas()
             if d < batch_id and (base_v is None or d > base_v)
-        ]
-        frames = []
-        if base_v is not None:
-            frames.append(self.spark.read.parquet(self._path(base_v)))
-        frames.extend(
-            self.spark.read.parquet(self._delta_path(d)) for d in deltas
         )
-        if not frames:
+        if not paths:
             return None
-        state = frames[0]
-        for f in frames[1:]:
-            state = state.unionByName(f)
-        if len(frames) > 1:
-            state = self._latest_per_key(state)
-        return state
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def _watermark(self, state: DataFrame | None):
         """Watermark scalar = max(order_cols[0]) - late_delay over the
@@ -282,38 +282,38 @@ class VersionState:
 
     def filter_and_advance(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
         """Drop rows at or below the key's applied version (and, with
-        ``late_delay``, rows below the watermark), persist the
-        advanced state snapshot for ``batch_id``, and return the
-        admitted rows."""
-        prev = self._load_before(batch_id)
+        ``late_delay``, rows below the watermark), persist batch
+        ``batch_id``'s versions, and return the admitted rows (lazy).
+        Admission is a left anti-join of the batch against the state
+        relation: a row goes when some state row of its key is at or
+        above it, lexicographic over ``order_cols``; a key absent from
+        the state passes, and a NULL version compare rejects. An anti
+        join never multiplies batch rows, so the state needs no fold."""
+        schema = batch_df.select(*self.keys, *self.order_cols).schema
+        prev = self._load_before(batch_id, schema)
         admitted = batch_df
         wm = self._watermark(prev)
         if wm is not None:
             admitted = admitted.filter(F.col(self.order_cols[0]) >= F.lit(wm))
         if prev is not None:
             st = prev.select(
-                *self.keys,
-                *[
-                    F.col(c).alias(f"__st_{c}")
-                    for c in self.order_cols
-                ],
+                *[F.col(k).alias(f"__st_{k}") for k in self.keys],
+                *[F.col(c).alias(f"__st_{c}") for c in self.order_cols],
             )
-            # strictly-newer lexicographic compare on order_cols; a key
-            # absent from the state (left join miss) always passes
+            # strictly-newer lexicographic compare on order_cols
             newer = F.lit(False)
             eq = F.lit(True)
             for c in self.order_cols:
                 newer = newer | (eq & (F.col(c) > F.col(f"__st_{c}")))
                 eq = eq & (F.col(c) == F.col(f"__st_{c}"))
-            admitted = (
-                # no broadcast hint: AQE broadcasts the state while it
-                # is small and falls back to a key-partitioned join
-                # when the horizon holds many keys
-                admitted.join(st, on=list(self.keys), how="left")
-                .filter(F.col(f"__st_{self.order_cols[0]}").isNull() | newer)
-                .drop(*[f"__st_{c}" for c in self.order_cols])
-            )
-        self._write(batch_df, batch_id)
+            on = ~F.coalesce(newer, F.lit(False))
+            for k in self.keys:
+                on = (F.col(k) == F.col(f"__st_{k}")) & on
+            # no broadcast hint: AQE broadcasts the state while it is
+            # small and falls back to a key-partitioned join when the
+            # horizon holds many keys
+            admitted = admitted.join(st, on=on, how="left_anti")
+        self._write(batch_df, batch_id, schema)
         return admitted
 
     def _atomic_write(self, df: DataFrame, target: str, batch_id: int) -> None:
@@ -322,20 +322,22 @@ class VersionState:
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
         os.rename(tmp, target)
 
-    def _write(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _write(
+        self, batch_df: DataFrame, batch_id: int, schema: T.StructType
+    ) -> None:
         """Persist batch ``batch_id``'s version memory: ONE O(batch)
-        delta file (the batch's latest-per-key versions), plus — every
-        ``compact_every`` batches — a full ``state_v`` snapshot folding
-        the base with the pending deltas (watermark GC applied there,
-        where the whole state is in hand). The per-batch hot path
-        never rewrites O(state) data (r10, VERDICT r9 #7)."""
+        delta file holding the batch's raw ``(keys..., order_cols...)``
+        rows (one job, no shuffle), plus — every ``compact_every``
+        batches — a full ``state_v`` snapshot folding the base with the
+        pending deltas latest-per-key (watermark GC applied there, where
+        the whole state is in hand). The per-batch hot path never
+        rewrites O(state) data (r10, VERDICT r9 #7)."""
         target = self._delta_path(batch_id)
         if os.path.isdir(target) or os.path.isdir(self._path(batch_id)):
             return  # completed by a prior attempt of this batch (rename is atomic)
-        delta = self._latest_per_key(
-            batch_df.select(*self.keys, *self.order_cols)
+        self._atomic_write(
+            batch_df.select(*self.keys, *self.order_cols), target, batch_id
         )
-        self._atomic_write(delta, target, batch_id)
         snapshots = self._snapshots()
         prev_full = snapshots[-1] if snapshots else None
         pending = [
@@ -352,7 +354,7 @@ class VersionState:
         # batch's table-merge commit replays batch_id, whose
         # _load_before needs prev_full + the deltas above it (deleting
         # them here would silently re-admit stale rows on replay).
-        state = self._load_before(batch_id + 1)
+        state = self._latest_per_key(self._load_before(batch_id + 1, schema))
         new_wm = self._watermark(state)
         if new_wm is not None:
             state = state.filter(F.col(self.order_cols[0]) >= F.lit(new_wm))
@@ -411,26 +413,27 @@ def apply_changes_stream(
         )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # one microbatch feeds several actions (emptiness probe, the
-        # version-state delta write, the admitted-set probe, and the
-        # merge itself) — pin it so the source files are read once per
-        # batch instead of once per action (guide §5; r10). The
-        # admitted frame is pinned for the same reason: its state join
-        # otherwise re-runs between its probe and the merge.
+        # one microbatch feeds several actions (the version-state
+        # delta write, the emptiness probe and the merge itself) — pin
+        # it so the source files are read once per batch instead of
+        # once per action (guide §5; r10). The admitted frame is pinned
+        # for the same reason: its state join otherwise re-runs between
+        # its probe and the merge.
         batch_df = batch_df.persist()
         admitted = None
         try:
-            if batch_df.isEmpty():
-                return
-            _ensure_table(table, batch_df.schema)
-            merged_df = batch_df
-            if state is not None:
+            if state is None:
+                merged_df = batch_df
+            else:
+                # ONE probe: an empty batch admits nothing, so the
+                # admitted frame's probe also covers the batch's
                 admitted = state.filter_and_advance(
                     batch_df, batch_id
                 ).persist()
-                if admitted.isEmpty():
-                    return  # every row in the batch was stale or late
                 merged_df = admitted
+            if merged_df.isEmpty():
+                return  # empty batch, or every row was stale or late
+            _ensure_table(table, batch_df.schema)
             table.apply_changes(merged_df, strategy=strategy)
             if auto_compact:
                 table.maybe_compact(max_delta_layers=max_delta_layers)

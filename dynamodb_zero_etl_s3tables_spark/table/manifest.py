@@ -2012,6 +2012,11 @@ class ManagedTable:
             # files than the key_schema readers bind. Each task runs
             # under a copy of the caller's local properties (job group,
             # description, scheduler pool), so its job is the caller's.
+            # Cold-cache caveat: ``last`` is not materialized before the
+            # two jobs start, so both build it concurrently and its
+            # plan runs twice. Written one after the other, the same
+            # commit launches 4 jobs instead of 5 but takes the same
+            # wall time, so the overlap stays.
             from concurrent.futures import ThreadPoolExecutor
 
             from pyspark import inheritable_thread_target
