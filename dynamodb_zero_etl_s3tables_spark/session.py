@@ -74,6 +74,17 @@ def local_cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
+def driver_memory() -> str:
+    """Driver heap of the local session: ``$SPARK_DRIVER_MEM`` when
+    set, else half the host's physical memory in whole GiB (at least
+    1g) — the driver JVM shares the host with the Python workers."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "ddb-zero-etl-s3tables-spark",
     master: str | None = None,
@@ -83,7 +94,8 @@ def get_spark(
 
     Local default: ``local[<local_cpus()>]`` threads, shuffle
     partitions matched to cores (not the 200 default, which makes tiny
-    tasks locally; on a cluster pass an explicit larger value).
+    tasks locally; on a cluster pass an explicit larger value), and a
+    driver heap of :func:`driver_memory`.
     """
     cpus = local_cpus()
     master = master or f"local[{cpus}]"
@@ -93,7 +105,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

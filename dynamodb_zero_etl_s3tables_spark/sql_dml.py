@@ -307,11 +307,38 @@ def _check_target(engine: "ZeroEtlEngine", name: str) -> None:
         )
 
 
+def _local_df(spark, rows: list[tuple], schema) -> DataFrame:
+    """A small driver-side answer as a local relation: the rows travel
+    as one Arrow table, so collecting it runs no job (a
+    ``createDataFrame(list)`` frame runs a job of Python-worker
+    tasks). ``schema`` — a StructType or DDL string — fixes the
+    column names, types and nullability."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _result_df(engine: "ZeroEtlEngine", op: str, info: dict) -> DataFrame:
-    return engine.spark.createDataFrame(
+    return _local_df(
+        engine.spark,
         [(op, json.dumps(info, sort_keys=True, default=str))],
         "operation string, info string",
     )
+
+
+def _table_columns(engine: "ZeroEtlEngine") -> list[str]:
+    """The managed table's column names, from the manifest schema (no
+    relation is built over the snapshot's entries)."""
+    return [f.name for f in engine.table._head()[2].fields]
 
 
 # -- statement handlers ------------------------------------------------------
@@ -386,7 +413,7 @@ def _route_insert(engine: "ZeroEtlEngine", m: re.Match) -> DataFrame:
     merge_into (single equi-join commit)."""
     target_name, cols_text, body = m.groups()
     _check_target(engine, target_name)
-    target_cols = engine.table.read().columns
+    target_cols = _table_columns(engine)
     if body.upper().startswith("VALUES"):
         # let Spark's parser handle the literal rows
         cols = (
@@ -695,7 +722,7 @@ def _route_merge(
                     "`INSERT (cols) VALUES (exprs)` or `INSERT *`"
                 )
             if im.group(1) is None:  # INSERT *
-                tcols = set(engine.table.read().columns)
+                tcols = set(_table_columns(engine))
                 extra = [c for c in source.columns if c not in tcols]
                 if extra and not merge_schema:
                     # Delta refuses this too (absent schema evolution);
@@ -1081,7 +1108,8 @@ def _route_history(engine: "ZeroEtlEngine", m: re.Match) -> DataFrame:
         )
         for s in engine.table.history()
     ]
-    return engine.spark.createDataFrame(
+    return _local_df(
+        engine.spark,
         rows,
         "version long, operation string, committed_at double, "
         "row_count long, staged boolean",
@@ -1171,13 +1199,12 @@ def _route_show_tables(engine: "ZeroEtlEngine", m: re.Match) -> DataFrame:
         for ns in namespaces
         for t in engine.catalog.list_tables(ns)
     ]
-    return engine.spark.createDataFrame(
-        rows, "namespace string, tableName string"
-    )
+    return _local_df(engine.spark, rows, "namespace string, tableName string")
 
 
 def _route_show_namespaces(engine: "ZeroEtlEngine", m: re.Match) -> DataFrame:
-    return engine.spark.createDataFrame(
+    return _local_df(
+        engine.spark,
         [(ns,) for ns in engine.catalog.list_namespaces()],
         "namespace string",
     )
@@ -1339,7 +1366,7 @@ def try_metadata_select(
         else:
             fields.append(T.StructField(alias, by_name[col].dataType, True))
             values.append(agg["min" if fn == "min" else "max"][col])
-    return engine.spark.createDataFrame([tuple(values)], T.StructType(fields))
+    return _local_df(engine.spark, [tuple(values)], T.StructType(fields))
 
 
 # ---------------------------------------------------------------------------

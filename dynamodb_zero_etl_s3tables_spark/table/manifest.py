@@ -38,6 +38,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any, NamedTuple
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -687,7 +688,10 @@ class ManagedTable:
             "snapshots": [s.to_dict() for s in m.snapshots],
         }
         tmp = self.manifest_path.with_suffix(f".tmp-{uuid.uuid4().hex}")
-        tmp.write_text(json.dumps(payload, indent=2))
+        # no indent: an indented dump falls back to the pure-Python
+        # encoder (2.5-6x slower), and its whitespace nearly doubles a
+        # manifest with many per-file stats
+        tmp.write_text(json.dumps(payload))
         os.replace(tmp, self.manifest_path)  # atomic on POSIX
 
     # -- reads --------------------------------------------------------------
@@ -1383,16 +1387,21 @@ class ManagedTable:
         read the planned entries (the whole head when ``plan`` is
         None), apply ``rewrite`` and commit the result with the carried
         entries, anchored at ``m``'s version so an interleaving commit
-        fails the CAS instead of being clobbered."""
+        fails the CAS instead of being clobbered. The rewrite is
+        clustered by partition (:meth:`_clustered`), so each rewritten
+        partition is written as one file however the rewrite's plan
+        splits its input."""
         snap = m.current
         if plan is None:
             self._write_snapshot(
-                rewrite(self.read(version=snap.version)),
+                self._clustered(rewrite(self.read(version=snap.version))),
                 operation=operation, expected_version=m.version,
             )
             return {"partitions_rewritten": None, "partitions_carried": None}
         self._write_snapshot(
-            rewrite(self._read_partition_entries(plan.touched, schema)),
+            self._clustered(
+                rewrite(self._read_partition_entries(plan.touched, schema))
+            ),
             operation=operation, carry_entries=plan.carry,
             expected_version=m.version,
             # carried entries still store dropped-column values; keep
@@ -1403,6 +1412,21 @@ class ManagedTable:
             "partitions_rewritten": len(plan.touched),
             "partitions_carried": len(plan.carry),
         }
+
+    def _clustered(self, df: DataFrame) -> DataFrame:
+        """Cluster a rewrite the engine produced by the partition
+        columns, so the write makes one file per partition rather than
+        one per task that holds its rows (a broadcast merge runs a task
+        per base split plus one per batch partition). AQE's rebalance
+        handling still splits a partition larger than
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. A no-op
+        for unpartitioned specs, and for ``sort_columns`` specs, whose
+        write already repartitions by partition. Caller-supplied
+        frames (bootstrap, overwrite, compact) keep their layout."""
+        pcols = self.spec.partition_columns
+        if not pcols or self.spec.sort_columns:
+            return df
+        return df.hint("rebalance", *pcols)
 
     def maybe_compact(
         self,
@@ -1677,8 +1701,9 @@ class ManagedTable:
             # fill columns added by evolution so old snapshots stay readable
             from pyspark.sql import functions as F
 
+            present = set(df.columns)  # one analysis of the plan
             for f in evolved.fields:
-                if f.name not in df.columns:
+                if f.name not in present:
                     df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
             # cast-through aligns narrow incoming columns with a
             # widened (or wider stored) schema; no-op when types match
@@ -1863,6 +1888,14 @@ class ManagedTable:
         O(batch) write cost instead of O(touched data), which is what
         keeps minute-level CDC cadence affordable on a 100 TB table;
         ``compact()`` later materializes the accumulated chain.
+
+        A copy-on-write commit reads the batch three times (the
+        planner's partition-value probe, then the merge's touched keys
+        and its upsert images), so it persists the batch for the
+        commit and releases it afterwards, on success and on failure:
+        the batch's plan runs once. A frame the caller already
+        persisted is read as is and stays persisted. Each rewritten
+        partition is written as one file (:meth:`_clustered`).
         """
         if strategy not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unknown merge strategy {strategy!r}")
@@ -1894,18 +1927,25 @@ class ManagedTable:
             )
         schema = T.StructType.fromJson(json.loads(snap.schema_json))
         pcols = tuple(self.spec.partition_columns)
-        plan = (
-            self._plan(snap, schema, touched=changes, layout=pcols)
-            if pcols
-            else None
-        )
-        self._cow_commit(
-            m0, plan, schema,
-            lambda base: merge_changes(
-                base, changes, keys=self.spec.key_columns, order_cols=order
-            ),
-            "merge",
-        )
+        owned = changes.storageLevel == StorageLevel.NONE
+        if owned:
+            changes = changes.persist()
+        try:
+            plan = (
+                self._plan(snap, schema, touched=changes, layout=pcols)
+                if pcols
+                else None
+            )
+            self._cow_commit(
+                m0, plan, schema,
+                lambda base: merge_changes(
+                    base, changes, keys=self.spec.key_columns, order_cols=order
+                ),
+                "merge",
+            )
+        finally:
+            if owned:
+                changes.unpersist()
 
     def merge_into(
         self,
@@ -1928,7 +1968,9 @@ class ManagedTable:
         source columns. ``merge_schema=True`` enables Delta-style
         automatic schema evolution (additive columns + Iceberg
         widenings; the manifest schema evolves with the commit via
-        the shared B4 gate).
+        the shared B4 gate). The merged table is a full rewrite,
+        clustered by partition (:meth:`_clustered`) so each partition
+        is written as one file.
         Semantics and scale notes: :func:`..merge.merge_into`."""
         from dynamodb_zero_etl_s3tables_spark.table.merge import merge_into
 
@@ -1945,7 +1987,9 @@ class ManagedTable:
             not_matched_by_source=not_matched_by_source,
         )
         self._write_snapshot(
-            merged, operation="merge-into", expected_version=m0.version
+            self._clustered(merged),
+            operation="merge-into",
+            expected_version=m0.version,
         )
 
     def _apply_changes_mor(

@@ -10,7 +10,11 @@ the reference Lambda applies to policy statements
 Scale posture: one shuffle on the key columns for the window dedup,
 one for the anti-join — both partition-parallel, no driver collect.
 With the target table bucketed/partitioned on the same keys the
-anti-join co-locates and AQE handles skewed keys.
+anti-join co-locates and AQE handles skewed keys. A batch the caller
+persisted (``ManagedTable.apply_changes`` persists its copy-on-write
+batch) carries exact size statistics, so a small batch's touched keys
+broadcast and the anti-join runs without shuffling the base; the
+commit then clusters its output by partition before the write.
 """
 
 from __future__ import annotations

@@ -6,6 +6,7 @@ time travel stays intact, and vacuum respects shared dirs."""
 import time
 from datetime import date, datetime
 from decimal import Decimal
+from pathlib import Path
 
 import pytest
 from pyspark.sql import Row
@@ -203,3 +204,134 @@ def test_typed_partition_verbs_rewrite_one_of_three(spark, warehouse, kind):
     assert t.update_matching(keys, {"x": "x + 1"}) == one_of_three
     ref[1] = (1, v0, 11.0)
     assert rows() == sorted(ref.values())
+
+
+# -- one evaluation of the change batch, one file per rewritten entry --
+
+_SPREAD = TableSpec(
+    namespace="ns",
+    name="spread",
+    key_columns=("pk",),
+    partition_columns=("shard",),
+    order_columns=("seq",),
+)
+
+
+def _spread_table(spark, warehouse):
+    """40 rows over 4 shards, bootstrapped from 8 Spark partitions, so
+    every shard starts as several files."""
+    t = ManagedTable(spark, warehouse, _SPREAD)
+    t.bootstrap(
+        spark.range(40)
+        .repartition(8)
+        .select(
+            F.col("id").alias("pk"),
+            F.concat(F.lit("s"), F.col("id") % 4).alias("shard"),
+            (F.col("id") * 1.0).alias("price"),
+        )
+    )
+    return t
+
+
+def _spread_changes(spark, pk=None):
+    """A MODIFY of every even key (shards s0 and s2), spread over 8
+    Spark partitions; ``pk`` replaces the key column."""
+    ids = spark.range(0, 40, 2).repartition(8)
+    return ids.select(
+        F.lit("MODIFY").alias("op"),
+        F.lit(1).cast("long").alias("seq"),
+        (F.col("id") if pk is None else pk).alias("pk"),
+        F.concat(F.lit("s"), F.col("id") % 4).alias("shard"),
+        F.lit(-1.0).alias("price"),
+    )
+
+
+def _rewritten_entries(t):
+    """The entries the latest commit wrote (not carried): their
+    parquet file counts, from the manifest and from the disk."""
+    m = t._read_manifest()
+    before = {e["dir"] for e in m.snapshots[-2].partitions}
+    return {
+        e["values"]["shard"]: (
+            len(e["files"]),
+            len(list(Path(e["dir"]).glob("*.parquet"))),
+        )
+        for e in m.current.partitions
+        if e["dir"] not in before
+    }
+
+
+def test_cow_commit_evaluates_the_batch_once(spark, warehouse):
+    """The planner's probe and both merge branches read one
+    materialization of the batch: a Python UDF on the keys runs once
+    per batch row, not once per reader."""
+    from pyspark.sql import types as T
+
+    t = _spread_table(spark, warehouse)
+    calls = spark.sparkContext.accumulator(0)
+
+    def count_key(k):
+        calls.add(1)
+        return k
+
+    key = F.udf(count_key, T.LongType())(F.col("id"))
+    t.apply_changes(_spread_changes(spark, pk=key))
+    assert calls.value == 20
+    assert {r.pk for r in t.read().collect() if r.price == -1.0} == set(range(0, 40, 2))
+
+
+def test_cow_rewrites_write_one_file_per_entry(spark, warehouse):
+    """A CoW merge, a predicate DELETE and a SQL MERGE each write one
+    parquet file per rewritten partition, although their inputs span
+    8 Spark partitions."""
+    from dynamodb_zero_etl_s3tables_spark.engine import ZeroEtlEngine
+    from dynamodb_zero_etl_s3tables_spark.spec import SourceSpec
+
+    t = _spread_table(spark, warehouse)
+    assert all(len(e["files"]) > 1 for e in t._read_manifest().current.partitions)
+
+    t.apply_changes(_spread_changes(spark))
+    assert _rewritten_entries(t) == {"s0": (1, 1), "s2": (1, 1)}
+
+    t.delete_where([("shard", "=", "s1"), ("pk", "<", 20)])
+    assert _rewritten_entries(t) == {"s1": (1, 1)}
+
+    eng = ZeroEtlEngine(
+        spark, warehouse,
+        SourceSpec(table_name="spread-ddb", key_columns=("pk",)), _SPREAD,
+    )
+    _spread_changes(spark).createOrReplaceTempView("spread_src")
+    eng.sql(
+        "MERGE INTO ns.spread t USING spread_src s ON t.pk = s.pk "
+        "WHEN MATCHED THEN UPDATE SET price = s.price + 1"
+    )
+    assert _rewritten_entries(t) == {f"s{i}": (1, 1) for i in range(4)}
+    assert t.read().count() == 35
+
+
+def test_cow_commit_keeps_the_callers_persisted_batch(spark, warehouse):
+    """A batch the caller persisted is read as is: apply_changes
+    neither re-persists nor releases it."""
+    from pyspark import StorageLevel
+
+    t = _spread_table(spark, warehouse)
+    batch = _spread_changes(spark).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        batch.count()
+        t.apply_changes(batch)
+        assert batch.storageLevel == StorageLevel.MEMORY_AND_DISK
+    finally:
+        batch.unpersist()
+
+
+def test_failed_cow_commit_releases_the_batch(spark, warehouse):
+    """An invalid op still raises, commits no snapshot, and leaves no
+    persisted batch behind."""
+    t = _spread_table(spark, warehouse)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    bad = _spread_changes(spark).withColumn("op", F.lit("UPSERT"))
+    with pytest.raises(Exception, match="invalid change op"):
+        t.apply_changes(bad)
+    assert t.version == 1
+    assert set(jsc.getPersistentRDDs().keySet()) == before

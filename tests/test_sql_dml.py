@@ -746,3 +746,30 @@ def test_merge_insert_star_refuses_extra_source_columns(spark, warehouse):
             WHEN NOT MATCHED THEN INSERT *
             """
         )
+
+
+def test_dml_and_metadata_answers_collect_without_a_job(spark, warehouse):
+    """A routed statement's answer and a metadata fast-path answer are
+    local relations: collecting them runs no Spark job."""
+    eng = _engine(spark, warehouse, "answers")
+    sc = spark.sparkContext
+
+    def collect_jobs(df, group):
+        sc.setJobGroup(group, group)
+        try:
+            rows = df.collect()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    res = eng.sql("DELETE FROM ns.answers WHERE pk = 1")
+    rows, jobs = collect_jobs(res, "dml-answer")
+    assert rows[0].operation == "delete" and jobs == 0
+    assert res.schema.simpleString() == "struct<operation:string,info:string>"
+
+    meta = eng.sql("SELECT COUNT(*) AS n, MIN(pk) AS lo, MAX(pk) AS hi FROM ns.answers")
+    rows, jobs = collect_jobs(meta, "meta-answer")
+    assert [tuple(r) for r in rows] == [(3, 2, 4)] and jobs == 0
+    assert meta.schema.simpleString() == "struct<n:bigint,lo:bigint,hi:bigint>"
